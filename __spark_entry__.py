@@ -1,10 +1,10 @@
 """Driver contract for the spark-graft builder (PySpark target).
 
 The engine lives in ``legend_community_delta_spark``; the demo model and
-query suite live in ``legend_community_delta_spark.demo``.  Each
-``queries()`` entry has a DuckDB ``oracle_sql()`` twin unless the operator
-is approximate/hash-seeded by nature (MinHash/SimHash/LSH), which get
-rows-only checks.
+query suite live in ``legend_community_delta_spark.demo``, declared once
+per entry in ``demo.REGISTRY``.  Each ``queries()`` entry has a DuckDB
+``oracle_sql()`` twin unless it is iterative, approximate or physical by
+nature (``ROWS_ONLY_RATIONALE``), which get rows-only checks.
 """
 
 from __future__ import annotations
@@ -28,26 +28,6 @@ def entry(spark: SparkSession) -> DataFrame:
     return demo.QUERIES["legend_mapping_orders"](spark, "/root/testdata/sf0.001")
 
 
-_RECHECK_FIRST: dict[str, int] = {
-    # Entries whose operator internals were deeply REWRITTEN after
-    # their newest driver-side oracle row (value = that row's round).
-    # They outrank the stale-first order so the next driver sample
-    # re-verifies the rewritten code; once a newer CORRECTNESS row
-    # lands, the condition `newest <= value` goes false and the
-    # priority evaporates on its own (VERDICT r12 item 2: the r12
-    # suffix rewrite rotated out of the r12 sample window).
-    "exact_span_docs": 11,
-    "exact_span_docs_char": 11,
-    "exact_span_keep_first": 11,
-    "top_dup_windows": 11,
-    "max_dup_spans": 11,
-    "max_dup_spans_char": 11,
-    "longest_dup_span_docs": 11,
-    "exact_contamination_spans": 11,
-    "exact_contamination_docs": 11,
-}
-
-
 def _rotation_order(names: list[str],
                     artifact_dir: str | None = None) -> list[str]:
     """Order contract entries stale-first by driver-artifact freshness.
@@ -57,8 +37,6 @@ def _rotation_order(names: list[str],
     is oldest (or missing) go first; ties keep the demo suite's
     insertion order.  This keeps every entry's driver row rotating to
     at most a few rounds old without hand-maintained priority lists.
-    Entries in :data:`_RECHECK_FIRST` whose driver row predates their
-    rewrite jump the queue until that row refreshes.
     """
     import glob
     import json
@@ -81,9 +59,7 @@ def _rotation_order(names: list[str],
         for k in rows:
             newest[k] = max(newest.get(k, 0), rnd)
     pos = {n: i for i, n in enumerate(names)}
-    return sorted(names, key=lambda n: (
-        0 if newest.get(n, -1) <= _RECHECK_FIRST.get(n, -2) else 1,
-        newest.get(n, -1), pos[n]))
+    return sorted(names, key=lambda n: (newest.get(n, -1), pos[n]))
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
@@ -101,64 +77,4 @@ def oracle_sql() -> dict[str, str]:
 # Why the rows-only entries have no oracle (driver records a rows-only
 # check for these; everything else is value-hashed against DuckDB):
 ROWS_ONLY_RATIONALE: dict[str, str] = {
-    # round 7: minhash_pairs / simhash_pairs / embedding_dedup_pairs
-    # moved OFF this list — their contract entries now run the
-    # md5-portable signature mode, which DuckDB reproduces exactly
-    # (full value oracles in demo.ORACLES).
-    "unigram_vocab": "Unigram-LM (SentencePiece) training: the EM "
-                     "fixed point over segmentation lattices is "
-                     "iterative, not one-query SQL; EM math pinned "
-                     "vs a pure-python reference in tests.",
-    "unigram_token_stats": "Same EM rationale; Viterbi encode counts "
-                           "under the trained model.",
-    # round 8: wordpiece_token_stats moved OFF this list — the greedy
-    # longest-match walk is a DuckDB recursive CTE over distinct words
-    # joined to a precomputed longest-match table (full value oracle
-    # in demo.ORACLES).
-    "lsh_ann_topk": "Approximate NN: result is top-k over LSH-probed "
-                    "buckets, deliberately a (recall-pinned) subset of "
-                    "the exact scan.",
-    "lsh_index_topk": "Same as lsh_ann_topk, served from the persisted "
-                      "signature-partitioned index.",
-    "ivf_index_topk": "IVF probes n_probe k-means cells; k-means "
-                      "assignment is iterative and seed-dependent.",
-    "events_sketch_stats": "HyperLogLog estimates (engine-specific "
-                           "digests, pinned within 5% of exact in "
-                           "tests/test_sketches.py).",
-    "pq_ann_topk": "Product-quantization ADC + exact re-rank: the "
-                   "shortlist depends on k-means codebooks (iterative, "
-                   "data-order-seeded); refined recall floors pinned in "
-                   "tests/test_curation.py.",
-    "semdedup_pairs": "SemDeDup within-cell cosine pairs: the candidate "
-                      "universe depends on iterative k-means cell "
-                      "assignment; subset-of-brute-force pinned in "
-                      "tests/test_semdedup.py.",
-    "semantic_contamination_pairs": "Cross-corpus within-cell cosine "
-                                    "screen: k-means cells again; "
-                                    "planted-leak recall and "
-                                    "subset-of-brute-force pinned in "
-                                    "tests/test_semdedup.py.",
-    "bpe_merge_table": "BPE training: the greedy left-to-right merge "
-                       "fold is iterative (one round per merge), not "
-                       "one-query SQL; merge table pinned EXACTLY "
-                       "against an independent pure-python BPE in "
-                       "tests/test_tokenize.py.",
-    "bpe_token_stats": "Same fold: per-word segmentations come from the "
-                       "iterative merge rounds; end-to-end goldens in "
-                       "tests/test_tokenize.py.",
-    # round 9: Z-order layout metrics describe the PHYSICAL file layout
-    # (per-file parquet footer min/max), which no SQL over the logical
-    # table can express; pruning completeness + stats==recomputed-truth
-    # pinned in tests/test_layout.py.  The companion entry
-    # zorder_roundtrip_lineitem IS fully value-oracled (row-multiset
-    # preservation through the rewrite).
-    "zorder_skipping_stats": "File-layout metric from parquet footers; "
-                             "not expressible as SQL over the logical "
-                             "table.  Invariants pinned in "
-                             "tests/test_layout.py.",
-    # round 11: media_decode_stats / media_frames_stats moved OFF this
-    # list — the synthetic pixels/samples are pure integer formulas, so
-    # DuckDB re-derives every aggregate from generate_series over
-    # (seed, y, x, c) without touching payload bytes (full value
-    # oracles in demo.ORACLES).
-}
+    e.name: e.rows_only for e in demo.REGISTRY if e.rows_only}

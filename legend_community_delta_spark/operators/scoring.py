@@ -840,7 +840,8 @@ def cdc_chunks_arrow(df: DataFrame, text_col: str = "text",
                      boundary_hex: int = 1,
                      min_tokens: int = 4) -> DataFrame:
     """Arrow-batched twin of :func:`cdc_chunks` in PORTABLE (md5) mode —
-    byte-identical rows (pinned in tests/test_scoring_ops.py), built for
+    byte-identical rows (pinned by
+    tests/test_scoring.py::test_cdc_chunks_arrow_matches_hof), built for
     the guide §4.2 sweet spot: the HOF plan evaluates the rolling-window
     md5 + boundary fold as per-row INTERPRETED expressions (higher-order
     lambdas fall out of whole-stage codegen), while this path hands

@@ -347,6 +347,8 @@ def ann_recall(df: DataFrame, queries: DataFrame, approx_fn, k: int = 10,
     approximate method for a single query row (e.g. a
     :func:`lsh_topk_df` or :func:`query_ivf_index` closure).  Ground
     truth comes from :func:`cosine_topk_many` over the same *queries*.
+    The per-query calls run concurrently on a 4-thread pool, so
+    *approx_fn* must not mutate shared state.
 
     ANN knobs (n_planes, multiprobe, n_probe, n_centroids) trade
     candidate-set size against recall; this is the harness that turns

@@ -103,47 +103,17 @@ def test_topk_is_take_ordered(spark):
     assert "TakeOrderedAndProject" in plan   # per-partition k, no global sort
 
 
-# queries whose callable runs eager jobs/writes when invoked (streaming
-# harnesses, index builds, iterative CC, provenance) — their UDF-freeness
-# is covered by their operators' own tests; everything else is pinned here
-_EAGER_QUERIES = {
-    "events_hourly_stream", "dedup_stream_docs", "sessionize_stream",
-    "stream_stream_join", "lsh_index_topk", "ivf_index_topk",
-    "near_dup_clusters", "curate_corpus_docs", "curation_provenance",
-    # r13: entries that EXECUTE work during query construction (model
-    # training, store writes, streams, iterative label propagation,
-    # eager checkpoints) are not lazily plannable either — their
-    # returned plan is dominated by ExistingRDD scans of the already-
-    # executed pipeline, so the Python-eval assertion on it was
-    # vacuous while costing 1.4-8.4 s of pipeline execution EACH
-    # (~95 s of the suite's 45-minute wall-clock; per-query profile in
-    # OPTIMIZATION_r13.md).  The operator-level plan shapes for these
-    # families stay pinned in their module tests
-    # (test_spans/test_suffix/test_scale_plan's remaining entries).
-    "unigram_vocab", "unigram_token_stats", "leakage_splits",
-    "pq_ann_topk", "incremental_components", "verified_near_dup_clusters",
-    "nb_stream_preds", "decontamination_stream", "near_dup_best_reps",
-    "semantic_contamination_pairs", "bm25_index_topk", "semdedup_pairs",
-    "span_dedup_stream", "stream_table_appends", "pagerank_near_dups",
-    "events_psi_stream", "surprisal_stream", "incremental_span_docs",
-    "max_dup_spans", "max_dup_spans_char", "longest_dup_span_docs",
-    "exact_span_docs", "exact_span_docs_char", "exact_span_keep_first",
-    "top_dup_windows", "exact_contamination_spans",
-    "exact_contamination_docs", "zorder_roundtrip_lineitem",
-    "zorder_skipping_stats", "simhash_pairs", "pair_store_pagerank",
-    "table_changes_orders", "delta_time_travel_orders",
-    "wordpiece_token_stats", "eval_ngram_docs", "bpe_merge_table",
-    "bpe_token_stats",
-}
-
-
 def test_no_python_udfs_anywhere(spark):
     """EVERY lazily-plannable contract query stays JVM-side: no
-    row-at-a-time or Arrow Python evaluation anywhere in any plan."""
+    row-at-a-time or Arrow Python evaluation anywhere in any plan.
+    Eager entries run their pipeline while the query is built, so the
+    plan they return is mostly scans of executed results; their
+    operators' plan shapes are pinned in the operators' own tests."""
+    eager = {e.name for e in demo.REGISTRY if e.eager}
     demo.ensure_views(spark, SF_DIR)
     checked = 0
     for name, fn in demo.QUERIES.items():
-        if name in _EAGER_QUERIES:
+        if name in eager:
             continue
         plan = _plan(fn(spark, SF_DIR))
         assert "BatchEvalPython" not in plan, name
