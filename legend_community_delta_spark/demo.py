@@ -4054,7 +4054,7 @@ LEFT JOIN per USING (doc_id)
 
 
 def _q_cdc_chunk_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Content-defined chunking (scoring.cdc_chunks): chunk boundaries
+    """Content-defined chunking (scoring.cdc_chunks_arrow): chunk boundaries
     fall where the rolling 4-token window's md5 starts with a hex zero
     (expected chunk ~16 tokens), so identical passages chunk
     identically across docs and an insertion shifts only its own chunk
@@ -4063,11 +4063,9 @@ def _q_cdc_chunk_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     boundary rule and compares the chunk TEXT itself."""
     from .operators.scoring import cdc_chunks_arrow
     # single-file input arrives as one split; spread the per-window
-    # hashing across cores the way a multi-split scan would be.
-    # r13: Arrow-batched twin of the HOF plan (guide §4.2 — the rolling
-    # md5 + boundary fold were per-row interpreted expressions): 6.2 s
-    # -> 0.5 s at sf0.1, rows byte-identical (pinned in
-    # tests/test_scoring.py::test_cdc_chunks_arrow_matches_hof).
+    # hashing across cores the way a multi-split scan would be.  The
+    # rolling md5 + boundary fold run over whole Arrow batches instead
+    # of per-row interpreted higher-order expressions.
     docs = _spread(spark.table("documents"), spark)
     return (cdc_chunks_arrow(docs, window=4,
                              boundary_hex=1, min_tokens=1)

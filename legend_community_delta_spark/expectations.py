@@ -36,14 +36,6 @@ def _child(name: str, parent: str) -> str:
     return f"{parent}.{name}" if parent else name
 
 
-def _this_property(field: str) -> dict:
-    """Build a ``$this.<field>`` AST node (dotted names become nested access)."""
-    node: dict = {"_type": "var", "name": "this"}
-    for part in field.split("."):
-        node = {"_type": "property", "parameters": [node], "property": part}
-    return node
-
-
 def _field_rules(prop: Property, field: str, compile_sql: bool,
                  col: str) -> Rules:
     """Mandatory + size rules for one property (``Legend.scala:552-595``)."""

@@ -46,37 +46,6 @@ def literal_vector(values: list[float]) -> Column:
     return F.array(*[F.lit(float(v)) for v in values])
 
 
-def cosine_pandas_udf(query_vec: list[float]):
-    """Arrow-vectorized cosine against a fixed query vector.
-
-    The Pandas-UDF alternative for WIDE embeddings (1k+ dims), where one
-    numpy matmul per Arrow batch beats per-element Column expressions.
-    NOTE: BLAS pairwise summation differs from ``aggregate``'s
-    left-to-right order in the last ulp — use the Column version
-    (:func:`cosine`) when bit-reproducibility against another engine
-    matters; this one is for throughput.
-    """
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql.functions import pandas_udf
-
-    q = np.asarray(query_vec, dtype=np.float64)
-    qn = float(np.linalg.norm(q))
-
-    def cos(batch):
-        M = np.stack(batch.to_numpy()).astype(np.float64)
-        dots = M @ q
-        norms = np.linalg.norm(M, axis=1)
-        denom = norms * qn
-        out = np.where(denom > 0, dots / np.where(denom == 0, 1, denom), 0.0)
-        return pd.Series(out)
-
-    # real annotation objects: `from __future__ import annotations` would
-    # stringify inline hints, which pyspark's hint resolver rejects
-    cos.__annotations__ = {"batch": pd.Series, "return": pd.Series}
-    return pandas_udf("double")(cos)
-
-
 def hyperplane_signature(vec: Column | str, planes: list[list[float]]) -> Column:
     """Random-hyperplane LSH bit signature (as a long).  *planes* are
     driver-side constants (deterministic seed), so the expression is pure

@@ -101,8 +101,7 @@ def _string_quantile_bucket(df: DataFrame, id_col: str, n_buckets: int,
 def token_budget_cut(df: DataFrame, text_col: str = "text",
                      id_col: str = "doc_id", max_tokens: int = 0,
                      n_buckets: int = 1024,
-                     prefix_len: int = 8,
-                     string_bucketing: str = "quantile") -> DataFrame:
+                     prefix_len: int = 8) -> DataFrame:
     """Keep the id-ordered prefix of the corpus whose cumulative token
     count fits ``max_tokens`` — EXACT, without a corpus-wide
     single-partition window.
@@ -110,9 +109,8 @@ def token_budget_cut(df: DataFrame, text_col: str = "text",
     Scalable two-level prefix sum:
 
     1. bucket every doc with an *order-preserving* function of the id
-       (numeric: fixed-width ranges; string: sampled quantile cuts, or
-       a lexicographic prefix), so bucket order == id order across
-       buckets;
+       (numeric: fixed-width ranges; string: sampled quantile cuts), so
+       bucket order == id order across buckets;
     2. per-bucket token totals (one shuffled aggregate, ``n_buckets``
        output rows);
     3. exclusive running offsets across buckets — a window over only
@@ -123,16 +121,14 @@ def token_budget_cut(df: DataFrame, text_col: str = "text",
     5. keep rows where offset + within-bucket cumsum <= budget.
 
     The numeric path runs one metadata-sized min/max job to size the
-    bucket width.  For string ids ``string_bucketing="quantile"``
-    (default) derives cut points from a deterministic id sample —
-    even buckets regardless of id shape (a fixed prefix degenerates to
-    one fat bucket on zero-padded sequential ids); ``"prefix"`` keeps
-    the zero-job ``substring`` bucketing for ids known to spread at
-    *prefix_len*.  Same selected set as a global
+    bucket width.  String ids derive cut points from a deterministic
+    id sample — even buckets regardless of id shape (a fixed prefix
+    degenerates to one fat bucket on zero-padded sequential ids); when
+    the sample is too small to cut, the ids' first *prefix_len*
+    characters are the bucket.  Same selected set as a global
     ``Window.orderBy(id)`` running sum, at any scale.
     """
-    cum = _id_ordered_cumsum(df, text_col, id_col, n_buckets,
-                             prefix_len, string_bucketing)
+    cum = _id_ordered_cumsum(df, text_col, id_col, n_buckets, prefix_len)
     if cum is None:
         return df
     return (cum.where(F.col("__cum") <= F.lit(max_tokens))
@@ -140,8 +136,7 @@ def token_budget_cut(df: DataFrame, text_col: str = "text",
 
 
 def _id_ordered_cumsum(df: DataFrame, text_col: str, id_col: str,
-                       n_buckets: int, prefix_len: int,
-                       string_bucketing: str) -> DataFrame | None:
+                       n_buckets: int, prefix_len: int) -> DataFrame | None:
     """Shared engine of :func:`token_budget_cut` / :func:`pack_plan`:
     the bucketed two-level prefix sum.  Returns *df* plus ``__tok``
     (per-doc token count) and ``__cum`` (INCLUSIVE id-ordered running
@@ -155,13 +150,7 @@ def _id_ordered_cumsum(df: DataFrame, text_col: str, id_col: str,
         width = max(1, math.ceil((int(hi) - int(lo) + 1) / n_buckets))
         bucket = F.floor((F.col(id_col) - F.lit(int(lo))) / F.lit(width))
     elif isinstance(dt, StringType):
-        if string_bucketing not in ("quantile", "prefix"):
-            raise ValueError(
-                f"unknown string_bucketing [{string_bucketing}]; "
-                "expected 'quantile' or 'prefix'")
-        bucket = None
-        if string_bucketing == "quantile":
-            bucket = _string_quantile_bucket(df, id_col, n_buckets)
+        bucket = _string_quantile_bucket(df, id_col, n_buckets)
         if bucket is None:
             # prefix order is consistent with full lexicographic id order
             bucket = F.substring(F.col(id_col), 1, prefix_len)
@@ -183,8 +172,7 @@ def _id_ordered_cumsum(df: DataFrame, text_col: str, id_col: str,
 
 def pack_plan(df: DataFrame, text_col: str = "text",
               id_col: str = "doc_id", chunk_tokens: int = 2048,
-              n_buckets: int = 1024, prefix_len: int = 8,
-              string_bucketing: str = "quantile") -> DataFrame:
+              n_buckets: int = 1024, prefix_len: int = 8) -> DataFrame:
     """Sequence-packing plan: concatenate the corpus in id order into one
     token stream and cut fixed ``chunk_tokens`` blocks — per doc, its
     exact offsets and the chunk ids it lands in.  This is the layout
@@ -203,8 +191,7 @@ def pack_plan(df: DataFrame, text_col: str = "text",
     """
     if chunk_tokens <= 0:
         raise ValueError(f"chunk_tokens must be positive [{chunk_tokens}]")
-    cum = _id_ordered_cumsum(df, text_col, id_col, n_buckets,
-                             prefix_len, string_bucketing)
+    cum = _id_ordered_cumsum(df, text_col, id_col, n_buckets, prefix_len)
     if cum is None:
         return (df.select(F.col(id_col))
                 .withColumn("n_tokens", F.lit(0).cast("long"))

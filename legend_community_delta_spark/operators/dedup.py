@@ -95,28 +95,6 @@ def _hash_params(num_hashes: int, seed: int) -> list[tuple[int, int]]:
             for _ in range(num_hashes)]
 
 
-def minhash_signature(text_col: str, num_hashes: int = 64, shingle_k: int = 5,
-                      seed: int = 42) -> F.Column:
-    """MinHash signature column (array<long>) over character k-shingles.
-
-    ``min((a*h(s)+b) mod p)`` per permutation, as one Column expression.
-    NOTE: fine for ad-hoc use on modest rows, but the stack of 64
-    higher-order ``transform`` calls exceeds JVM codegen limits and falls
-    back to interpreted evaluation — for bulk dedup use
-    :func:`minhash_signatures_df` (explode + 64 min-aggregates, fully
-    codegen'd, ~20x faster and the shape that scales to 100 TB).
-    """
-    base = F.transform(char_shingles(text_col, shingle_k),
-                       lambda s: F.pmod(F.xxhash64(s), F.lit(_MERSENNE)))
-
-    def perm(a: int, b: int):
-        return lambda h: F.pmod(a * h + b, F.lit(_MERSENNE))
-
-    mins = [F.array_min(F.transform(base, perm(a, b)))
-            for a, b in _hash_params(num_hashes, seed)]
-    return F.array(*mins)
-
-
 def _minhash_mins_df(df: DataFrame, text_col: str, id_col: str,
                      num_hashes: int, shingle_k: int, seed: int) -> DataFrame:
     """(__id, __m0..__m{n-1}) per-permutation minima — the flat frame both
@@ -142,15 +120,9 @@ def minhash_signatures_df(df: DataFrame, text_col: str = "text",
     """(id, signature array<long>) — two strategies, same output shape:
 
     * ``kperm`` (default): classic k independent permutations, explode +
-      64 min-aggregates.  MEASURED fastest here: the 64 ``pmod(a*h+b)``
-      per exploded row fuse into one whole-stage-codegen loop, and the
-      aggregation has only |docs| groups (sf0.1: 9.4 s vs OPH's 12 s;
-      a higher-order-function OPH variant was 2.5x worse still).
-    * ``oph``: one-permutation hashing (Li/Owen/Zhang 2012) with bounded
-      rotational densification.  1 hash per shingle, but the (doc, slot)
-      aggregation carries 64x more groups — a better trade only when
-      signatures are much longer or per-row hashing is the true
-      bottleneck.  Same candidate pairs as kperm on the test corpora.
+      64 min-aggregates.  The 64 ``pmod(a*h+b)`` per exploded row fuse
+      into one whole-stage-codegen loop, and the aggregation has only
+      |docs| groups.
     * ``md5``: engine-PORTABLE k-min — slot 4t+j is the min over
       distinct shingles of the j-th 8-hex-char quarter of
       ``md5('mh{t}:' || shingle)`` read as a 32-bit integer, i.e. each
@@ -190,35 +162,7 @@ def minhash_signatures_df(df: DataFrame, text_col: str = "text",
             "__id",
             F.array(*[F.col(f"__m{i}")
                       for i in range(num_hashes)]).alias("__sig"))
-    if method != "oph":
-        raise ValueError(f"unknown minhash method [{method}]")
-
-    hashes = F.array_distinct(F.transform(
-        char_shingles(text_col, shingle_k),
-        lambda s: F.pmod(F.xxhash64(s, F.lit(seed)), F.lit(_MERSENNE))))
-    exploded = df.select(F.col(id_col).alias("__id"),
-                         F.explode(hashes).alias("__h"))
-    # stage 1: min per (doc, slot) — ONE cheap expression per exploded
-    # row; map-side combine shrinks the exchange to <= num_hashes rows
-    # per doc.  stage 2 pivots the <=64 rows/doc to flat columns with
-    # conditional mins (codegen'd, tiny input).  Everything stays flat
-    # Column expressions: higher-order-function variants of the pivot/
-    # densify fell out of codegen and ran 2.5x SLOWER than kperm.
-    per_slot = (exploded
-                .groupBy("__id",
-                         F.pmod("__h", F.lit(num_hashes)).alias("__slot"))
-                .agg(F.min("__h").alias("__m")))
-    mins = per_slot.groupBy("__id").agg(*[
-        F.min(F.when(F.col("__slot") == i, F.col("__m"))).alias(f"__m{i}")
-        for i in range(num_hashes)])
-    # rotational densification, bounded borrow: an empty slot takes the
-    # next non-empty slot within 8, else the doc-wide min (only docs with
-    # < ~num_hashes distinct shingles ever hit the fallback)
-    doc_min = F.least(*[F.col(f"__m{i}") for i in range(num_hashes)])
-    dense = [F.coalesce(*[F.col(f"__m{(i + j) % num_hashes}")
-                          for j in range(8)], doc_min)
-             for i in range(num_hashes)]
-    return mins.select("__id", F.array(*dense).alias("__sig"))
+    raise ValueError(f"unknown minhash method [{method}]")
 
 
 def minhash_dedup(df: DataFrame, text_col: str = "text", id_col: str = "doc_id",
@@ -365,7 +309,7 @@ def incremental_minhash_pairs(spark, path: str, new_docs: DataFrame,
 
     The call validates its signature parameters against the store's
     ``__meta`` footer (written by :func:`write_signature_store`) and
-    raises on mismatch — banding kperm against oph signatures, or two
+    raises on mismatch — banding kperm against md5 signatures, or two
     different seeds, silently produces garbage candidates otherwise.
     """
     assert num_hashes % bands == 0, "bands must divide num_hashes"

@@ -23,10 +23,13 @@ pretraining pipeline runs between validation and tokenization:
 * :func:`top_n_per_group` — quality-ordered per-group caps ("keep the
   best N docs per domain"), the deterministic version of per-source
   downsampling.
+* :func:`cdc_chunks_arrow` — content-defined chunking (md5 rolling-
+  window boundaries), the one Arrow-batched (``mapInPandas``) operator
+  here.
 
-All pure Column algebra + linear-shuffle aggregations — no Python UDFs,
-no driver materialization, every shuffle keyed by (id), (token) or
-(gram) with map-side partial aggregation.
+Everything else is pure Column algebra + linear-shuffle aggregations —
+no Python UDFs, no driver materialization, every shuffle keyed by (id),
+(token) or (gram) with map-side partial aggregation.
 """
 
 from __future__ import annotations
@@ -740,119 +743,35 @@ def kn_bigram_surprisal(df: DataFrame, text_col: str = "text",
                     "mean_neg_logprob_kn"))
 
 
-def cdc_chunks(df: DataFrame, text_col: str = "text",
-               id_col: str = "doc_id", window: int = 4,
-               boundary_hex: int = 1, min_tokens: int = 4,
-               portable: bool = False) -> DataFrame:
+def cdc_chunks_arrow(df: DataFrame, text_col: str = "text",
+                     id_col: str = "doc_id", window: int = 4,
+                     boundary_hex: int = 1,
+                     min_tokens: int = 4) -> DataFrame:
     """Content-defined chunking: boundaries fall where the rolling
     window's fingerprint hits a hash pattern, NOT at fixed offsets — so
     an insertion near a doc's start shifts only the chunk it lands in,
     and identical passages chunk identically across documents.  The
     chunk-level exact-dedup / incremental-sync primitive (LBFS/rsync
-    lineage), here over token streams.
+    lineage), here over token streams (the Java ``\\S+`` tokens of
+    :func:`..functions.text.tokens`).
 
-    A boundary closes a chunk after token ``i`` (1-based) when the
-    rolling fingerprint of the last *window* tokens hits the boundary
-    pattern (expected chunk length ``16^boundary_hex`` tokens) AND the
-    open chunk already holds >= *min_tokens* tokens (the standard
-    minimum-size guard against degenerate splits).  Two fingerprints:
-
-    * default (``portable=False``): ``xxhash64(window) % 16^boundary_hex
-      == 0`` — one JVM hash per window, ~4x cheaper than md5; the
-      production mode.
-    * ``portable=True``: ``md5(window)`` starts with *boundary_hex* hex
-      zeros — bit-identical on any engine, so even the chunk LAYOUT is
-      oracle-checkable in DuckDB; the contract-entry mode.
-
-    Both are content-defined (shift-locality holds identically); only
-    the boundary positions differ between modes.
+    A boundary closes a chunk after token ``i`` (1-based, ``i >=
+    window``) when ``md5`` of the last *window* tokens joined by one
+    space starts with *boundary_hex* hex zeros (expected chunk length
+    ``16^boundary_hex`` tokens) AND the open chunk already holds >=
+    *min_tokens* tokens (the standard minimum-size guard against
+    degenerate splits).  md5 is bit-identical on any engine, so even
+    the chunk LAYOUT is oracle-checkable in DuckDB.
 
     Returns ``(id, chunk_id, start_token, n_tokens, chunk_text)``,
-    ``chunk_id`` 0-based per doc; token-less docs yield no rows.
+    ``chunk_id`` 0-based per doc; token-less (empty or NULL) docs yield
+    no rows.
 
-    Scale shape: pure per-row Column algebra (rolling windows, an
-    aggregate fold for the min-size boundary filter, one explode) —
-    zero shuffles, embarrassingly parallel like :func:`chunk_docs`.
-    """
-    if window < 1:
-        raise ValueError(f"window must be >= 1 [{window}]")
-    if boundary_hex < 1:
-        raise ValueError(f"boundary_hex must be >= 1 [{boundary_hex}]")
-    if min_tokens < 1:
-        raise ValueError(f"min_tokens must be >= 1 [{min_tokens}]")
-    toks = tokens(text_col)
-    n = F.size(toks)
-    zeros = "0" * boundary_hex
-
-    def hits(i):
-        win = F.concat_ws(
-            " ", F.slice(toks, i - F.lit(window - 1), window))
-        if portable:
-            return F.substring(F.md5(win), 1, boundary_hex) == F.lit(zeros)
-        return F.pmod(F.xxhash64(win), F.lit(16 ** boundary_hex)) == 0
-
-    # raw boundary positions: token index i (1-based, i >= window) where
-    # the fingerprint of the window ending at i hits the boundary rule
-    raw = F.filter(
-        F.when(n >= window,
-               F.sequence(F.lit(window), F.greatest(n, F.lit(window))))
-        .otherwise(F.array().cast("array<int>")),
-        lambda i: (i <= n) & hits(i))
-    # enforce the min-size guard with a left-to-right fold: keep a
-    # boundary only if it is >= min_tokens past the previous KEPT
-    # boundary (or past 0 for the first)
-    kept = F.aggregate(
-        raw, F.array().cast("array<int>"),
-        # F.get is 0-based and NULL-safe on the empty accumulator
-        # (ANSI-mode element_at(-1) raises there)
-        lambda acc, i: F.when(
-            i - F.coalesce(F.get(acc, F.size(acc) - 1), F.lit(0))
-            >= F.lit(min_tokens),
-            F.concat(acc, F.array(i))).otherwise(acc))
-    # chunk start offsets: 0-based starts = {0} U kept boundaries that
-    # are not the doc end
-    starts = F.concat(
-        F.array(F.lit(0)),
-        F.filter(kept, lambda b: b < n))
-    base = df.select(
-        F.col(id_col), toks.alias("__toks"), n.alias("__n"),
-        starts.alias("__starts"))
-    ch = base.where(F.col("__n") > 0).select(
-        id_col, "__toks", "__n", "__starts",
-        F.posexplode("__starts").alias("chunk_id", "__s"))
-    # next chunk's start (0-based index chunk_id+1), NULL-safe at the
-    # tail via F.get (ANSI element_at would raise out-of-bounds)
-    nxt = F.coalesce(
-        F.get("__starts", F.col("chunk_id") + F.lit(1)),
-        F.col("__n"))
-    return (ch
-            .select(id_col, "chunk_id",
-                    F.col("__s").cast("long").alias("start_token"),
-                    (nxt - F.col("__s")).cast("long").alias("n_tokens"),
-                    F.array_join(
-                        F.slice("__toks", F.col("__s") + F.lit(1),
-                                nxt - F.col("__s")), " ")
-                    .alias("chunk_text")))
-
-
-def cdc_chunks_arrow(df: DataFrame, text_col: str = "text",
-                     id_col: str = "doc_id", window: int = 4,
-                     boundary_hex: int = 1,
-                     min_tokens: int = 4) -> DataFrame:
-    """Arrow-batched twin of :func:`cdc_chunks` in PORTABLE (md5) mode —
-    byte-identical rows (pinned by
-    tests/test_scoring.py::test_cdc_chunks_arrow_matches_hof), built for
-    the guide §4.2 sweet spot: the HOF plan evaluates the rolling-window
-    md5 + boundary fold as per-row INTERPRETED expressions (higher-order
-    lambdas fall out of whole-stage codegen), while this path hands
-    whole Arrow batches to one tight Python loop per task.  Zero
-    shuffles either way — `mapInPandas` over just ``(id, text)`` keeps
-    the scan pruned to the two columns the rule needs (§4.1).
-
-    The xxhash64 production mode stays on :func:`cdc_chunks`: Spark's
-    seed-42 xxhash64 is not available to the Python worker without a
-    native dependency, and reimplementing it row-wise would cost more
-    than the interpreted expressions it replaces.
+    Scale shape: zero shuffles.  `mapInPandas` over just ``(id, text)``
+    keeps the scan pruned to the two columns the rule needs and hands
+    whole Arrow batches to one tight Python loop per task, instead of
+    per-row interpreted higher-order expressions (which fall out of
+    whole-stage codegen).
     """
     if window < 1:
         raise ValueError(f"window must be >= 1 [{window}]")

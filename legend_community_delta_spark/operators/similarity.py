@@ -70,23 +70,6 @@ def cosine_topk_many(df: DataFrame, queries: DataFrame, k: int = 10,
             .where(F.col("rank") <= k))
 
 
-def cosine_topk_pandas(df: DataFrame, query_vec: list[float], k: int = 10,
-                       vec_col: str = "embedding",
-                       id_col: str = "vec_id") -> DataFrame:
-    """Top-k via an Arrow-vectorized Pandas UDF (numpy matmul per batch).
-
-    Throughput path for wide embeddings; see
-    :func:`..functions.vectors.cosine_pandas_udf` for the determinism
-    caveat vs the Column-algebra version.
-    """
-    from ..functions.vectors import cosine_pandas_udf
-    cos = cosine_pandas_udf(query_vec)
-    return (df.select(F.col(id_col),
-                      F.round(cos(F.col(vec_col)), 6).alias("cosine"))
-            .orderBy(F.desc("cosine"), F.col(id_col))
-            .limit(k))
-
-
 def kmeans_centroids(df: DataFrame, n_centroids: int = 16, iters: int = 3,
                      vec_col: str = "embedding", id_col: str = "vec_id",
                      assume_normalized: bool = False) -> list[list[float]]:

@@ -57,10 +57,6 @@ def property_receiver(node: Node) -> Node | None:
     return params[0] if params else None
 
 
-def is_var(node: Node, name: str | None = None) -> bool:
-    return node_type(node) == "var" and (name is None or node.get("name") == name)
-
-
 def is_func(node: Node, name: str | None = None) -> bool:
     return node_type(node) == "func" and (name is None or node.get("function") == name)
 

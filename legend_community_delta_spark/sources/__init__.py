@@ -2,20 +2,12 @@
 
 The reference's ingest pattern is ``spark.read.format(...).schema(legend
 schema).load(path)`` (``LegendSparkTest.scala:47-48``); these helpers wrap
-it for json/csv/parquet plus catalog tables, and register the driver's
-synthetic test tables as temp views.
+it for json/csv/parquet plus catalog tables.
 """
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
-
-TESTDATA_TABLES = [
-    "region", "nation", "customer", "supplier", "part",
-    "orders", "lineitem", "events", "documents", "embeddings",
-]
 
 
 def read_with_schema(spark: SparkSession, path: str, schema,
@@ -25,15 +17,6 @@ def read_with_schema(spark: SparkSession, path: str, schema,
     for k, v in options.items():
         reader = reader.option(k, v)
     return reader.load(path)
-
-
-def register_testdata(spark: SparkSession, sf_dir: str,
-                      tables: list[str] | None = None) -> None:
-    """Register each ``<sf_dir>/<name>.parquet`` as a temp view ``name``."""
-    for name in tables or TESTDATA_TABLES:
-        path = os.path.join(sf_dir, f"{name}.parquet")
-        if os.path.exists(path):
-            spark.read.parquet(path).createOrReplaceTempView(name)
 
 
 def write_table(df: DataFrame, table: str, mode: str = "append",

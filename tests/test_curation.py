@@ -1,4 +1,4 @@
-"""Curation pipeline + pandas-UDF cosine + IVF refinement tests."""
+"""Curation pipeline + IVF refinement tests."""
 
 from __future__ import annotations
 
@@ -7,8 +7,6 @@ from pyspark.sql import Row
 
 from legend_community_delta_spark.operators.curation import curate_corpus
 from legend_community_delta_spark.operators.similarity import (
-    cosine_topk,
-    cosine_topk_pandas,
     ivf_topk,
     kmeans_centroids,
 )
@@ -149,16 +147,6 @@ def test_token_budget_cut_matches_global_window(spark):
     assert doc_windows and all("__b" in ln for ln in doc_windows)
 
 
-def test_pandas_cosine_agrees_with_column(spark):
-    emb = spark.read.parquet(f"{SF_DIR}/embeddings.parquet")
-    q = [float(x) for x in emb.where("vec_id = 0").first()["embedding"]]
-    col_top = cosine_topk(emb, q, k=5).collect()
-    pd_top = cosine_topk_pandas(emb, q, k=5).collect()
-    assert [r["vec_id"] for r in col_top] == [r["vec_id"] for r in pd_top]
-    for a, b in zip(col_top, pd_top):
-        assert a["cosine"] == pytest.approx(b["cosine"], abs=1e-5)
-
-
 def test_ivf_with_kmeans_refinement(spark):
     emb = spark.read.parquet(f"{SF_DIR}/embeddings.parquet")
     q = [float(x) for x in emb.where("vec_id = 7").first()["embedding"]]
@@ -272,16 +260,11 @@ def test_token_budget_quantile_bucketing_shared_prefix(spark):
     n_used = docs.select(bucket.alias("b")).distinct().count()
     assert n_used >= n_buckets // 2
 
-    # per-doc running sum stays partitioned by bucket (parallel), and the
-    # explicit prefix fallback still selects the same set
+    # per-doc running sum stays partitioned by bucket (parallel)
     plan = got._jdf.queryExecution().executedPlan().toString()
     doc_windows = [ln for ln in plan.splitlines()
                    if "windowspecdefinition" in ln and "doc_id" in ln]
     assert doc_windows and all("__b" in ln for ln in doc_windows)
-    pref = token_budget_cut(docs, max_tokens=10_000, n_buckets=n_buckets,
-                            prefix_len=8, string_bucketing="prefix")
-    assert sorted(r["doc_id"] for r in pref.select("doc_id").collect()) \
-        == expect
 
 
 def test_events_sketch_within_tolerance(spark):

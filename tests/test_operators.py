@@ -306,12 +306,10 @@ def test_redact_pii_and_counts(spark):
 
 
 def test_minhash_oph_agrees_with_kperm(docs):
-    from legend_community_delta_spark.operators.dedup import minhash_dedup
-    kp = {(r["id_a"], r["id_b"])
-          for r in minhash_dedup(docs, threshold=0.5, method="kperm").collect()}
-    op = {(r["id_a"], r["id_b"])
-          for r in minhash_dedup(docs, threshold=0.5, method="oph").collect()}
-    assert kp and kp == op
+    """One-permutation hashing is not a signature method: only kperm
+    and md5 are, and any other name is refused up front."""
+    with pytest.raises(ValueError, match="unknown minhash method"):
+        DD.minhash_dedup(docs, threshold=0.5, method="oph")
 
 
 def test_minhash_md5_mode_same_recall(docs):

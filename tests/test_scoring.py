@@ -5,6 +5,7 @@ plus the plan-shape pins (WindowGroupLimit for the per-group caps)."""
 from __future__ import annotations
 
 import math
+import re
 
 import pytest
 
@@ -446,9 +447,14 @@ def test_kn_probabilities_sum_to_one_per_left_token(spark):
 
 # -- round-6: content-defined chunking --------------------------------------
 
+# Java regex \S is ASCII-only ([^ \t\n\x0B\f\r]) — the class
+# functions.text.tokens() splits on
+_JAVA_TOKEN = re.compile(r"[^ \t\n\x0b\f\r]+")
+
+
 def _cdc_ref(text, window, hexz, min_tokens):
     import hashlib
-    toks = text.split()
+    toks = _JAVA_TOKEN.findall(text or "")
     n = len(toks)
     raw = [i for i in range(window, n + 1)
            if hashlib.md5(" ".join(toks[i - window:i]).encode())
@@ -466,8 +472,17 @@ def _cdc_ref(text, window, hexz, min_tokens):
     return out if n else []
 
 
+def _cdc_by_doc(df, **kw):
+    from legend_community_delta_spark.operators.scoring import (
+        cdc_chunks_arrow)
+    got = {}
+    for r in cdc_chunks_arrow(df, **kw).collect():
+        got.setdefault(r.doc_id, []).append(
+            (r.chunk_id, r.start_token, r.n_tokens, r.chunk_text))
+    return {i: sorted(ch) for i, ch in got.items()}
+
+
 def test_cdc_chunks_matches_reference_and_reconstructs(spark):
-    from legend_community_delta_spark.operators.scoring import cdc_chunks
     import random
     rng = random.Random(21)
     rows = [(i, " ".join(rng.choice("abcdefgh")
@@ -475,52 +490,43 @@ def test_cdc_chunks_matches_reference_and_reconstructs(spark):
             for i in range(30)]
     df = spark.createDataFrame(rows, "doc_id long, text string")
     for window, hexz, mint in ((2, 1, 1), (4, 1, 3), (3, 1, 5)):
-        got = {}
-        for r in cdc_chunks(df, window=window, boundary_hex=hexz,
-                            min_tokens=mint, portable=True).collect():
-            got.setdefault(r.doc_id, []).append(
-                (r.chunk_id, r.start_token, r.n_tokens, r.chunk_text))
+        got = _cdc_by_doc(df, window=window, boundary_hex=hexz,
+                          min_tokens=mint)
         for i, text in rows:
             want = _cdc_ref(text, window, hexz, mint)
-            assert sorted(got.get(i, [])) == want, (i, window, mint)
+            assert got.get(i, []) == want, (i, window, mint)
             # chunks reconstruct the doc exactly
             if text.split():
-                joined = " ".join(
-                    t for _, _, _, t in sorted(got[i]))
+                joined = " ".join(t for _, _, _, t in got[i])
                 assert joined == " ".join(text.split())
 
 
 def test_cdc_chunks_arrow_matches_hof(spark):
-    """r13: the Arrow-batched portable-mode twin must produce
-    byte-identical rows to the HOF reference on random fixtures, unicode
-    whitespace (Java \\S is ASCII-only — the Python regex must agree),
-    nulls, and empties."""
-    from legend_community_delta_spark.operators.scoring import (
-        cdc_chunks, cdc_chunks_arrow)
-    import random
-    rng = random.Random(77)
-    rows = [(i, " ".join(rng.choice("abcdefgh")
-                         for _ in range(rng.randint(0, 60))))
-            for i in range(30)]
-    rows += [(100, ""), (101, None), (102, "one"),
-             (103, "a b c\td  e"),       # NBSP is NOT Java \s
-             (104, "x " * 200)]
+    """Edge inputs — empty, NULL, one token, unicode whitespace (Java
+    \\S is ASCII-only, so NBSP is not a separator) and one long
+    repetitive doc — match the pure-Python reference, and each doc's
+    chunks rejoin to the JVM tokenizer's own token stream."""
+    from legend_community_delta_spark.functions.text import tokens
+    rows = [(100, ""), (101, None), (102, "one"),
+            (103, "a b c\td  e"),       # NBSP is NOT Java \s
+            (104, "x " * 200)]
     df = spark.createDataFrame(rows, "doc_id long, text string")
+    jvm = {r.doc_id: r.t for r in df.select(
+        "doc_id", F.array_join(tokens("text"), " ").alias("t")).collect()}
     for window, hexz, mint in ((2, 1, 1), (4, 1, 3), (3, 1, 5)):
-        a = sorted(map(tuple, cdc_chunks_arrow(
-            df, window=window, boundary_hex=hexz,
-            min_tokens=mint).collect()))
-        b = sorted(map(tuple, cdc_chunks(
-            df, window=window, boundary_hex=hexz,
-            min_tokens=mint, portable=True).collect()))
-        assert a == b, (window, hexz, mint)
+        got = _cdc_by_doc(df, window=window, boundary_hex=hexz,
+                          min_tokens=mint)
+        for i, text in rows:
+            assert got.get(i, []) == _cdc_ref(text, window, hexz, mint), \
+                (i, window, mint)
+            assert " ".join(t for _, _, _, t in got.get(i, [])) \
+                == (jvm[i] or ""), (i, window, mint)
 
 
 def test_cdc_chunks_content_defined_shift_locality(spark):
     """Inserting a token near the head must leave all chunks after the
     next boundary byte-identical — the property fixed-size chunking
     lacks and the whole point of CDC."""
-    from legend_community_delta_spark.operators.scoring import cdc_chunks
     import random
     rng = random.Random(5)
     base = [rng.choice("abcdefgh") for _ in range(200)]
@@ -528,44 +534,11 @@ def test_cdc_chunks_content_defined_shift_locality(spark):
     df = spark.createDataFrame(
         [(1, " ".join(base)), (2, " ".join(shifted))],
         "doc_id long, text string")
-    # BOTH fingerprint modes are content-defined; the property must
-    # hold identically for the fast xxhash64 default and the
-    # md5-portable oracle mode
-    for portable in (False, True):
-        ch = {}
-        for r in cdc_chunks(df, window=3, boundary_hex=1,
-                            min_tokens=1, portable=portable).collect():
-            ch.setdefault(r.doc_id, set()).add(r.chunk_text)
-        common = ch[1] & ch[2]
-        # everything beyond the first boundary after the insertion is
-        # shared
-        assert len(common) >= max(len(ch[1]) - 2, 1), portable
-
-
-def test_cdc_chunks_fast_mode_reconstructs(spark):
-    """The xxhash64 default mode still reconstructs every doc exactly
-    and honors the min-size guard."""
-    from legend_community_delta_spark.operators.scoring import cdc_chunks
-    import random
-    rng = random.Random(31)
-    rows = [(i, " ".join(rng.choice("abcdefgh")
-                         for _ in range(rng.randint(0, 60))))
-            for i in range(20)]
-    df = spark.createDataFrame(rows, "doc_id long, text string")
-    got = {}
-    for r in cdc_chunks(df, window=3, boundary_hex=1,
-                        min_tokens=3).collect():
-        got.setdefault(r.doc_id, []).append(
-            (r.chunk_id, r.start_token, r.n_tokens, r.chunk_text))
-    for i, text in rows:
-        toks = text.split()
-        if not toks:
-            assert i not in got
-            continue
-        chunks = sorted(got[i])
-        assert " ".join(t for _, _, _, t in chunks) == " ".join(toks)
-        # min-size guard: every chunk except the last holds >= 3 tokens
-        assert all(nt >= 3 for _, _, nt, _ in chunks[:-1])
+    ch = {i: {t for _, _, _, t in chunks} for i, chunks in _cdc_by_doc(
+        df, window=3, boundary_hex=1, min_tokens=1).items()}
+    common = ch[1] & ch[2]
+    # everything beyond the first boundary after the insertion is shared
+    assert len(common) >= max(len(ch[1]) - 2, 1)
 
 
 def test_stupid_backoff_hand_computed_all_levels(spark):

@@ -10,8 +10,6 @@ import duckdb
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 SF = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
-TABLES = ("region nation customer supplier part orders lineitem events "
-          "documents embeddings").split()
 
 
 def canon(v):
@@ -27,6 +25,7 @@ def main(only: list[str]) -> int:
         "__spark_entry__", os.path.join(REPO, "__spark_entry__.py"))
     mod = importlib.util.module_from_spec(spec)
     spec.loader.exec_module(mod)
+    from legend_community_delta_spark.demo import _TABLES
 
     from pyspark.sql import SparkSession
     spark = (SparkSession.builder.master("local[8]")
@@ -35,7 +34,7 @@ def main(only: list[str]) -> int:
     spark.sparkContext.setLogLevel("ERROR")
 
     con = duckdb.connect()
-    for t in TABLES:
+    for t in _TABLES:
         con.execute(f"CREATE OR REPLACE VIEW {t} AS "
                     f"SELECT * FROM '{SF}/{t}.parquet'")
 
