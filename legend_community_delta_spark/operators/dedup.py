@@ -24,7 +24,8 @@ import random
 
 from pyspark.sql import DataFrame, Window, functions as F
 
-from ..functions import local_df
+from ..functions import (check_footer, read_footer, read_if_exists,
+                         write_store)
 from ..functions.text import char_shingles, content_hash, word_ngrams
 from ..functions.vectors import cosine, hyperplane_signature
 
@@ -256,36 +257,18 @@ def write_signature_store(df: DataFrame, path: str, text_col: str = "text",
     signatures only for its own docs and band-joins against the store —
     the full corpus is never re-shingled (at 100 TB, re-shingling is the
     whole cost).  The signature parameters (method, num_hashes,
-    shingle_k, seed) are recorded in a ``__meta`` footer and validated
-    by :func:`incremental_minhash_pairs` — mismatched parameters would
-    silently band-join incompatible signatures.
+    shingle_k, seed) are recorded in the store footer —
+    :func:`incremental_minhash_pairs` and appends must match them.
     """
     params = {"method": method, "num_hashes": int(num_hashes),
               "shingle_k": int(shingle_k), "seed": int(seed)}
-    if mode == "append":
-        # appending signatures computed with different parameters would
-        # corrupt the store (mixed bands in one file set) — validate
-        # against the existing footer before writing anything
-        try:
-            existing = df.sparkSession.read.parquet(f"{path}__meta").first()
-        except Exception:
-            existing = None  # first write or pre-metadata store
-        if existing is not None:
-            stored = {k: existing[k] for k in params}
-            if stored != params:
-                raise ValueError(
-                    f"signature store at [{path}] was built with {stored}; "
-                    f"append called with {params} — mixed-parameter "
-                    "signatures are incompatible. Match the store or "
-                    "rebuild with mode='overwrite'.")
     sigs = minhash_signatures_df(df, text_col, id_col, num_hashes,
                                  shingle_k, seed, method)
-    (sigs.withColumnRenamed("__id", id_col)
-         .withColumnRenamed("__sig", "sig")
-         .write.mode(mode).parquet(path))
-    meta = local_df(df.sparkSession, [tuple(params.values())],
-                    "method string, num_hashes int, shingle_k int, seed int")
-    meta.coalesce(1).write.mode("overwrite").parquet(f"{path}__meta")
+    write_store(sigs.withColumnRenamed("__id", id_col)
+                .withColumnRenamed("__sig", "sig"), path,
+                [tuple(params.values())],
+                "method string, num_hashes int, shingle_k int, seed int",
+                mode, "signature store", params)
 
 
 def incremental_minhash_pairs(spark, path: str, new_docs: DataFrame,
@@ -307,30 +290,19 @@ def incremental_minhash_pairs(spark, path: str, new_docs: DataFrame,
     runs then keep pairs a from-scratch run would have suppressed.  Only
     the new batch is shingled; the store side reads (id, sig) parquet.
 
-    The call validates its signature parameters against the store's
-    ``__meta`` footer (written by :func:`write_signature_store`) and
-    raises on mismatch — banding kperm against md5 signatures, or two
-    different seeds, silently produces garbage candidates otherwise.
+    Signature parameters must match the store footer's (banding kperm
+    against md5 signatures, or two different seeds, silently produces
+    garbage candidates); the method is the store's.  A store without a
+    footer (pre-metadata) takes the caller's parameters.
     """
     assert num_hashes % bands == 0, "bands must divide num_hashes"
     r = num_hashes // bands
 
-    try:
-        meta = spark.read.parquet(f"{path}__meta").first()
-    except Exception:
-        meta = None  # pre-metadata store: caller-supplied params stand
-    method = "kperm"
-    if meta is not None:
-        passed = {"num_hashes": num_hashes, "shingle_k": shingle_k,
-                  "seed": seed}
-        stored = {k: meta[k] for k in passed}
-        if stored != passed:
-            raise ValueError(
-                f"signature store at [{path}] was built with {stored} "
-                f"(method={meta['method']}); called with {passed} — "
-                "incompatible signatures would band-join as garbage. "
-                "Match the store parameters or rebuild the store.")
-        method = meta["method"]
+    meta = read_footer(spark, path, required=False)
+    check_footer("signature store", path, meta,
+                 {"num_hashes": num_hashes, "shingle_k": shingle_k,
+                  "seed": seed})
+    method = meta[0]["method"] if meta else "kperm"
 
     new_sigs = minhash_signatures_df(new_docs, text_col, id_col,
                                      num_hashes, shingle_k, seed, method)
@@ -962,38 +934,24 @@ def write_pair_store(pairs: DataFrame, path: str, *,
     propose + exact-verify pass) ONCE per corpus snapshot, then every
     consumer — clustering, leakage-safe splits, PageRank, dedup drops —
     reads the store instead of regenerating.  The footer records
-    (method, n, threshold) and :func:`read_pairs` validates against it:
-    pairs mined with different gram sizes or thresholds must never be
-    silently mixed or reused below their mining threshold.
+    (method, n, threshold): pairs mined with different gram sizes or
+    thresholds must never be silently mixed or reused below their
+    mining threshold.  Appends are idempotent.
     """
     params = {"method": method, "n": int(n), "threshold": float(threshold)}
     to_write = pairs.select("id_a", "id_b", "jaccard")
-    if mode == "append":
-        try:
-            existing = pairs.sparkSession.read.parquet(
-                f"{path}__meta").first()
-        except Exception:
-            existing = None  # first write
-        if existing is not None:
-            stored = {k: existing[k] for k in params}
-            if stored != params:
-                raise ValueError(
-                    f"pair store at [{path}] was built with {stored}; "
-                    f"append called with {params} — mixed-parameter "
-                    "pairs are incompatible. Match the store or rebuild "
-                    "with mode='overwrite'.")
-            # re-running the same mining job must not double edges:
-            # anti-join the batch against the store on (id_a, id_b) so
-            # appends are idempotent (downstream pagerank / connected
-            # components would otherwise double-count duplicated pairs).
-            prior = pairs.sparkSession.read.parquet(path)
-            to_write = to_write.join(
-                prior.select("id_a", "id_b"), ["id_a", "id_b"],
-                "left_anti")
-    to_write.write.mode(mode).parquet(path)
-    meta = local_df(pairs.sparkSession, [tuple(params.values())],
-                    "method string, n int, threshold double")
-    meta.coalesce(1).write.mode("overwrite").parquet(f"{path}__meta")
+    prior = (read_if_exists(pairs.sparkSession, path)
+             if mode == "append" else None)
+    if prior is not None:
+        # re-running the same mining job must not double edges:
+        # anti-join the batch against the store on (id_a, id_b) so
+        # appends are idempotent (downstream pagerank / connected
+        # components would otherwise double-count duplicated pairs).
+        to_write = to_write.join(prior.select("id_a", "id_b"),
+                                 ["id_a", "id_b"], "left_anti")
+    write_store(to_write, path, [tuple(params.values())],
+                "method string, n int, threshold double", mode,
+                "pair store", params)
 
 
 def read_pairs(spark, path: str, *, method: str | None = None,
@@ -1006,21 +964,17 @@ def read_pairs(spark, path: str, *, method: str | None = None,
     a LOWER one raises — those pairs were never mined and silence here
     would under-report duplication.
     """
-    meta = spark.read.parquet(f"{path}__meta").first()
-    if method is not None and meta.method != method:
-        raise ValueError(
-            f"pair store at [{path}] holds [{meta.method}] pairs; "
-            f"read requested [{method}]")
-    if n is not None and int(meta.n) != int(n):
-        raise ValueError(
-            f"pair store at [{path}] was mined with n={meta.n}; "
-            f"read requested n={n} — regenerate the store")
+    meta = read_footer(spark, path)
+    check_footer("pair store", path, meta,
+                 {k: v for k, v in (("method", method), ("n", n))
+                  if v is not None})
     pairs = spark.read.parquet(path)
     if threshold is not None:
-        if float(threshold) < float(meta.threshold):
+        mined = meta[0]["threshold"]
+        if float(threshold) < mined:
             raise ValueError(
                 f"pair store at [{path}] was mined at threshold "
-                f">= {meta.threshold}; pairs below that were never "
+                f">= {mined}; pairs below that were never "
                 f"generated — cannot serve threshold={threshold}")
         pairs = pairs.where(F.col("jaccard") >= float(threshold))
     return pairs

@@ -24,6 +24,8 @@ import warnings
 from pyspark.sql import DataFrame, Window, functions as F
 from pyspark.sql.types import IntegralType
 
+from ..functions import read_if_exists
+
 
 def connected_components(pairs: DataFrame, src: str = "id_a",
                          dst: str = "id_b", max_iter: int = 30,
@@ -176,17 +178,7 @@ def incremental_components(spark, path: str, new_pairs: DataFrame,
     CTE oracle).  Per batch the propagation runs over
     ``|store| + |batch|`` star/new edges, not the full edge history.
     """
-    from pyspark.errors import AnalysisException
-    try:
-        # Resolve through Spark's Hadoop filesystem layer, not os.path:
-        # for non-local store URIs (s3://, hdfs://, dbfs:/) an os.path
-        # probe always says "absent", which would silently restart
-        # clustering from scratch and diverge incremental from batch.
-        stored = spark.read.parquet(path)
-    except AnalysisException as exc:
-        if "PATH_NOT_FOUND" not in str(exc):
-            raise
-        stored = None
+    stored = read_if_exists(spark, path)
     e = new_pairs.select(F.col(src).alias("a"), F.col(dst).alias("b"))
     if stored is not None:
         star = (stored.where(F.col("id") != F.col("component"))

@@ -57,6 +57,17 @@ def _query_terms(queries: DataFrame) -> DataFrame:
             TX.tokens("query"), lambda t: F.lower(t)))).alias("tok"))
 
 
+def _corpus_stats(docs: DataFrame, text_col: str) -> DataFrame:
+    """One row ``(n_docs, avgdl)`` over the whole corpus."""
+    return docs.agg(
+        F.count(F.lit(1)).alias("n_docs"),
+        # NULL text must be IGNORED by the average (size() on a NULL
+        # token array yields -1 under Spark's legacy sizeOfNull, which
+        # would skew avgdl; SQL AVG skips NULLs, matching the oracle)
+        F.avg(F.when(F.col(text_col).isNotNull(),
+                     F.size(TX.tokens(text_col)))).alias("avgdl"))
+
+
 def _bm25_rank(hit: DataFrame, qterms: DataFrame, stats: DataFrame,
                k: int, k1: float, b: float) -> DataFrame:
     """Shared scoring tail: *hit* = query-term postings ``(tok, doc_id,
@@ -109,13 +120,7 @@ def bm25_topk(docs: DataFrame, queries: DataFrame, k: int = 10,
     # twice (measured 3.1 s -> 2.5 s warm at sf0.1).
     hit = (post.join(F.broadcast(qterms.select("tok").distinct()), "tok")
            .localCheckpoint(eager=True))
-    stats = docs.agg(
-        F.count(F.lit(1)).alias("n_docs"),
-        # NULL text must be IGNORED by the average (size() on a NULL
-        # token array yields -1 under Spark's legacy sizeOfNull, which
-        # would skew avgdl; SQL AVG skips NULLs, matching the oracle)
-        F.avg(F.when(F.col(text_col).isNotNull(),
-                     F.size(TX.tokens(text_col)))).alias("avgdl"))
+    stats = _corpus_stats(docs, text_col)
     return _bm25_rank(hit, qterms, stats, k, k1, b)
 
 
@@ -133,13 +138,7 @@ def write_bm25_index(docs: DataFrame, path: str, text_col: str = "text",
     (post.withColumn("__bkt", F.substring(F.md5("tok"), 1, prefix_len))
      .write.mode("overwrite").partitionBy("__bkt")
      .parquet(f"{path}/postings"))
-    stats = docs.agg(
-        F.count(F.lit(1)).alias("n_docs"),
-        # NULL text must be IGNORED by the average (size() on a NULL
-        # token array yields -1 under Spark's legacy sizeOfNull, which
-        # would skew avgdl; SQL AVG skips NULLs, matching the oracle)
-        F.avg(F.when(F.col(text_col).isNotNull(),
-                     F.size(TX.tokens(text_col)))).alias("avgdl"))
+    stats = _corpus_stats(docs, text_col)
     (stats.withColumn("prefix_len", F.lit(int(prefix_len)))
      .coalesce(1).write.mode("overwrite").parquet(f"{path}/meta"))
 

@@ -15,7 +15,7 @@ import random
 
 from pyspark.sql import DataFrame, Window, functions as F
 
-from ..functions import local_df
+from ..functions import local_df, read_footer, write_store
 from ..functions.vectors import (cosine, dot, hyperplane_signature,
                                  literal_vector)
 
@@ -188,11 +188,9 @@ def build_lsh_index(df: DataFrame, path: str, dims: int,
     rng = random.Random(seed)
     planes = [[rng.gauss(0, 1) for _ in range(dims)]
               for _ in range(n_planes)]
-    (df.withColumn("__sig", hyperplane_signature(vec_col, planes))
-       .write.mode("overwrite").partitionBy("__sig").parquet(path))
-    meta = local_df(df.sparkSession, [(int(n_planes), int(seed), int(dims))],
-                    "n_planes int, seed int, dims int")
-    meta.coalesce(1).write.mode("overwrite").parquet(f"{path}__meta")
+    write_store(df.withColumn("__sig", hyperplane_signature(vec_col, planes)),
+                path, [(int(n_planes), int(seed), int(dims))],
+                "n_planes int, seed int, dims int", partition_by="__sig")
 
 
 def query_lsh_index(spark, path: str, query_vec: list[float], k: int = 10,
@@ -206,7 +204,7 @@ def query_lsh_index(spark, path: str, query_vec: list[float], k: int = 10,
     buckets — ~(1+n_planes)/2^n_planes of the index, the point of
     persisting it.  Plans show ``PartitionFilters: [__sig IN (...)]``.
     """
-    n_planes, seed, dims = spark.read.parquet(f"{path}__meta").first()
+    n_planes, seed, dims = read_footer(spark, path)[0]
     if len(query_vec) != dims:
         raise ValueError(f"query dims {len(query_vec)} != index dims {dims}")
     rng = random.Random(seed)
@@ -239,12 +237,9 @@ def build_ivf_index(df: DataFrame, path: str, n_centroids: int = 16,
         F.struct(cosine(F.col(vec_col), literal_vector(c)).alias("sim"),
                  F.lit(i).alias("cell"))
         for i, c in enumerate(centroids)])
-    (df.withColumn("__cell", F.array_max(sims)["cell"])
-       .write.mode("overwrite").partitionBy("__cell").parquet(path))
-    meta = local_df(df.sparkSession,
-                    [(i, [float(x) for x in c]) for i, c in enumerate(centroids)],
-                    "cell int, centroid array<double>")
-    meta.coalesce(1).write.mode("overwrite").parquet(f"{path}__meta")
+    write_store(df.withColumn("__cell", F.array_max(sims)["cell"]), path,
+                [(i, [float(x) for x in c]) for i, c in enumerate(centroids)],
+                "cell int, centroid array<double>", partition_by="__cell")
     return centroids
 
 
@@ -254,8 +249,8 @@ def query_ivf_index(spark, path: str, query_vec: list[float], k: int = 10,
     """Top-k against a :func:`build_ivf_index` index: rank the stored
     centroids driver-side, read only the *n_probe* nearest cells
     (partition-pruned IN-list), exact cosine inside."""
-    rows = spark.read.parquet(f"{path}__meta").collect()
-    centroids = {r["cell"]: list(r["centroid"]) for r in rows}
+    centroids = {r["cell"]: list(r["centroid"])
+                 for r in read_footer(spark, path)}
 
     def _cos(a, b):
         dot_ = sum(x * y for x, y in zip(a, b))
@@ -501,27 +496,23 @@ def build_pq_index(df: DataFrame, path: str, dims: int, m: int = 8,
                    id_col: str = "vec_id") -> list[list[list[float]]]:
     """Train + encode + persist a PQ index: the codes frame as parquet
     (m ints per vector — the 32× memory story) plus the codebooks in a
-    meta footer.  Returns the codebooks."""
+    store footer.  Returns the codebooks."""
     codebooks = pq_train(df, dims, m, n_codes, iters, vec_col, id_col)
-    pq_encode(df, codebooks, vec_col, id_col)\
-        .write.mode("overwrite").parquet(path)
     flat = [(j, c, [float(x) for x in code])
             for j, codes_j in enumerate(codebooks)
             for c, code in enumerate(codes_j)]
-    meta = local_df(df.sparkSession, flat,
-                    "sub int, code int, centroid array<double>")
-    meta.coalesce(1).write.mode("overwrite").parquet(f"{path}__meta")
+    write_store(pq_encode(df, codebooks, vec_col, id_col), path, flat,
+                "sub int, code int, centroid array<double>")
     return codebooks
 
 
 def query_pq_index(spark, path: str, query_vec: list[float], k: int = 10,
                    id_col: str = "vec_id") -> DataFrame:
     """ADC top-k against a :func:`build_pq_index` index: codebooks load
-    from the meta footer (driver-sized), the scan touches ONLY the
+    from the store footer (driver-sized), the scan touches ONLY the
     compressed codes parquet."""
-    rows = spark.read.parquet(f"{path}__meta").collect()
     by_sub: dict[int, dict[int, list[float]]] = {}
-    for r in rows:
+    for r in read_footer(spark, path):
         by_sub.setdefault(r["sub"], {})[r["code"]] = list(r["centroid"])
     codebooks = [[by_sub[j][c] for c in sorted(by_sub[j])]
                  for j in sorted(by_sub)]

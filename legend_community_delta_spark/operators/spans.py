@@ -35,31 +35,59 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
-from ..functions import local_df
+from ..functions import read_footer, write_store
 from ..functions import text as TX
 
 _SEP = "\x1f"
 
 
-def _window_grams(base: DataFrame, id_col: str, n: int) -> DataFrame:
-    """One (id, start, gram-hash) row per n-token window; 1-based starts."""
+def _windows(n: int) -> F.Column:
+    """``array<struct<s, gh>>``: one (1-based start, gram hash) struct
+    per n-unit window of the ``__toks`` column — the one window-hash
+    definition every span operator and the span stream match on."""
     starts = F.when(
         F.size("__toks") >= n,
         F.sequence(F.lit(1), F.size("__toks") - F.lit(n - 1)),
     ).otherwise(F.array().cast("array<int>"))
+    return F.transform(
+        starts,
+        lambda s: F.struct(
+            s.alias("s"),
+            F.xxhash64(F.concat_ws(_SEP, F.slice("__toks", s, n)))
+            .alias("gh"),
+        ),
+    )
+
+
+def _window_grams(base: DataFrame, id_col: str, n: int) -> DataFrame:
+    """One (id, start, gram-hash) row per n-token window; 1-based starts."""
     return base.select(
-        F.col(id_col),
-        F.explode(
-            F.transform(
-                starts,
-                lambda s: F.struct(
-                    s.alias("s"),
-                    F.xxhash64(F.concat_ws(_SEP, F.slice("__toks", s, n)))
-                    .alias("gh"),
-                ),
-            )
-        ).alias("g"),
+        F.col(id_col), F.explode(_windows(n)).alias("g"),
     ).select(id_col, F.col("g.s").alias("s"), F.col("g.gh").alias("gh"))
+
+
+def _rebuild(base: DataFrame, grams: DataFrame, flagged_gh: DataFrame,
+             id_col: str, n: int, unit: str) -> DataFrame:
+    """``(id, n_tokens, n_removed, clean_text)``: each doc of *base*
+    minus every unit covered by one of its *grams* windows whose hash is
+    in *flagged_gh*."""
+    flagged = (grams.join(flagged_gh, "gh")
+               .groupBy(id_col)
+               .agg(F.collect_set("s").alias("__starts")))
+    joined = base.join(flagged, id_col, "left")
+    starts = F.coalesce(F.col("__starts"), F.array().cast("array<int>"))
+    kept = F.filter(
+        "__toks",
+        lambda t, i: ~F.exists(
+            starts, lambda s: (i + 1 >= s) & (i + 1 <= s + F.lit(n - 1))
+        ),
+    )
+    return joined.select(
+        F.col(id_col),
+        F.size("__toks").alias("n_tokens"),
+        (F.size("__toks") - F.size(kept)).alias("n_removed"),
+        F.concat_ws(TX.unit_joiner(unit), kept).alias("clean_text"),
+    )
 
 
 def duplicate_span_stats(
@@ -96,25 +124,7 @@ def duplicate_span_stats(
         .where(F.col("__cnt") >= min_count)
         .select("gh")
     )
-    flagged = (
-        grams.join(flagged_windows, "gh")
-        .groupBy(id_col)
-        .agg(F.collect_set("s").alias("__starts"))
-    )
-    joined = base.join(flagged, id_col, "left")
-    starts = F.coalesce(F.col("__starts"), F.array().cast("array<int>"))
-    kept = F.filter(
-        "__toks",
-        lambda t, i: ~F.exists(
-            starts, lambda s: (i + 1 >= s) & (i + 1 <= s + F.lit(n - 1))
-        ),
-    )
-    return joined.select(
-        F.col(id_col),
-        F.size("__toks").alias("n_tokens"),
-        (F.size("__toks") - F.size(kept)).alias("n_removed"),
-        F.concat_ws(TX.unit_joiner(unit), kept).alias("clean_text"),
-    )
+    return _rebuild(base, grams, flagged_windows, id_col, n, unit)
 
 
 def dedup_spans(
@@ -157,62 +167,37 @@ def write_span_store(df: DataFrame, path: str, text_col: str = "text",
     ``mode='append'`` appends partial counts (the reader re-aggregates
     by hash, so duplicate ``gh`` rows across file sets are fine — counts
     are mergeable by construction, like the HLL sketch store).  The
-    window width ``n`` is recorded in a ``__meta`` footer and validated
-    on read: counts of different widths must never merge.
+    footer records the window width ``n`` and *unit* (counts of
+    different widths or units must never merge) and whether every
+    ``gh`` key is unique in the files.
     """
     TX.unit_joiner(unit)                        # validate early
-    if mode == "append":
-        try:
-            existing = df.sparkSession.read.parquet(f"{path}__meta").first()
-        except Exception:
-            existing = None
-        if existing is not None and int(existing["n"]) != int(n):
-            raise ValueError(
-                f"span store at [{path}] holds n={existing['n']} window "
-                f"counts; append called with n={n} — different-width "
-                "windows are incompatible. Match the store or rebuild "
-                "with mode='overwrite'.")
-        # pre-unit stores carry no unit column and were token-built
-        existing_unit = (existing["unit"] if existing is not None
-                         and "unit" in existing.asDict() else
-                         None if existing is None else "token")
-        if existing_unit is not None and existing_unit != unit:
-            raise ValueError(
-                f"span store at [{path}] holds unit={existing_unit} "
-                f"window counts; append called with unit={unit} — "
-                "different units are incompatible. Match the store or "
-                "rebuild with mode='overwrite'.")
     base = df.select(F.col(id_col),
                      TX.unit_array(F.col(text_col), unit).alias("__toks"))
     counts = (_window_grams(base, id_col, n)
               .groupBy("gh").agg(F.count(F.lit(1)).alias("cnt")))
-    if mode == "ignore":
-        # Spark SKIPS the data write when the path already exists — the
-        # meta footer must then be left alone too, or a store that
-        # previously received appends would be falsely re-certified
-        # unique (ADVICE r12).  Probe through Spark's FS layer so
-        # non-local URIs resolve correctly.
-        jvm = df.sparkSession._jvm
-        hpath = jvm.org.apache.hadoop.fs.Path(path)
-        fs = hpath.getFileSystem(
-            df.sparkSession._jsc.hadoopConfiguration())
-        existed = fs.exists(hpath)
-        counts.write.mode(mode).parquet(path)
-        if existed:
-            return
-    else:
-        counts.write.mode(mode).parquet(path)
-    # ``unique`` records whether every gh key appears exactly once in
-    # the store files: true after a write that REPLACED (overwrite) or
-    # CREATED (error/errorifexists reaching this line, ignore on a
-    # fresh path) the data — the groupBy guarantees one row per gh;
-    # false once any append lands partial counts — readers then skip
-    # or pay the re-aggregation accordingly (r12, guide §2.4: metadata
-    # that removes a shuffle)
-    unique = mode != "append"
-    meta = local_df(df.sparkSession, [(int(n), unit, bool(unique))],
-                    "n int, unit string, unique boolean")
-    meta.coalesce(1).write.mode("overwrite").parquet(f"{path}__meta")
+    # ``unique``: every gh key appears exactly once in the store files —
+    # true after a write that REPLACED (overwrite) or CREATED the data
+    # (the groupBy guarantees one row per gh), false once any append
+    # lands partial counts; readers then skip or pay the re-aggregation
+    # accordingly (r12, guide §2.4: metadata that removes a shuffle)
+    write_store(counts, path, [(int(n), unit, mode != "append")],
+                "n int, unit string, unique boolean", mode, "span store",
+                {"n": int(n), "unit": unit}, {"unit": "token"})
+
+
+def read_span_store(spark, path: str):
+    """``(counts, n, unit)`` of a :func:`write_span_store` store:
+    *counts* holds one ``(gh, cnt)`` row per window hash — store rows
+    that appends left as partial counts are re-aggregated, a store whose
+    footer certifies unique keys skips that exchange (r12; footers
+    without ``unique`` re-aggregate, footers without ``unit`` are
+    token-built)."""
+    meta = read_footer(spark, path)[0].asDict()
+    counts = spark.read.parquet(path)
+    if not meta.get("unique"):
+        counts = counts.groupBy("gh").agg(F.sum("cnt").alias("cnt"))
+    return counts, int(meta["n"]), meta.get("unit", "token")
 
 
 def incremental_dup_spans(spark, path: str, new_docs: DataFrame,
@@ -229,18 +214,7 @@ def incremental_dup_spans(spark, path: str, new_docs: DataFrame,
     batch's windows, one outer merge keyed on the 8-byte hash against
     the store counts (which AQE broadcasts while the store is small),
     then the usual flagged-start collect + array rebuild."""
-    meta = spark.read.parquet(f"{path}__meta").first()
-    n = int(meta["n"])
-    # pre-unit stores carry no unit column and were token-built
-    unit = meta["unit"] if "unit" in meta.asDict() else "token"
-    # appends leave multiple partial-count rows per hash — re-aggregate
-    # before merging or the left join would replicate batch counts.  A
-    # store whose meta certifies unique gh keys (one overwrite write,
-    # no appends) skips that exchange: the rows ARE the aggregate
-    # (r12; pre-``unique`` stores conservatively re-aggregate).
-    store = spark.read.parquet(path)
-    if not ("unique" in meta.asDict() and meta["unique"]):
-        store = store.groupBy("gh").agg(F.sum("cnt").alias("cnt"))
+    store, n, unit = read_span_store(spark, path)
     base = new_docs.select(F.col(id_col),
                            TX.unit_array(F.col(text_col), unit)
                            .alias("__toks"))
@@ -258,23 +232,7 @@ def incremental_dup_spans(spark, path: str, new_docs: DataFrame,
                              + F.coalesce("cnt", F.lit(0))).alias("__cnt"))
               .where(F.col("__cnt") >= min_count)
               .select("gh"))
-    flagged = (grams.join(merged, "gh")
-               .groupBy(id_col)
-               .agg(F.collect_set("s").alias("__starts")))
-    joined = base.join(flagged, id_col, "left")
-    starts = F.coalesce(F.col("__starts"), F.array().cast("array<int>"))
-    kept = F.filter(
-        "__toks",
-        lambda t, i: ~F.exists(
-            starts, lambda s: (i + 1 >= s) & (i + 1 <= s + F.lit(n - 1))
-        ),
-    )
-    return joined.select(
-        F.col(id_col),
-        F.size("__toks").alias("n_tokens"),
-        (F.size("__toks") - F.size(kept)).alias("n_removed"),
-        F.concat_ws(TX.unit_joiner(unit), kept).alias("clean_text"),
-    )
+    return _rebuild(base, grams, merged, id_col, n, unit)
 
 
 def intra_doc_dup_spans(
@@ -307,17 +265,7 @@ def intra_doc_dup_spans(
         raise ValueError("n must be >= 1")
     base = df.select(
         F.col(id_col), TX.unit_array(F.col(text_col), unit).alias("__toks"))
-    starts = F.when(
-        F.size("__toks") >= n,
-        F.sequence(F.lit(1), F.size("__toks") - F.lit(n - 1)),
-    ).otherwise(F.array().cast("array<int>"))
-    wins = F.transform(
-        starts,
-        lambda s: F.struct(
-            s.alias("s"),
-            F.xxhash64(F.concat_ws(_SEP, F.slice("__toks", s, n)))
-            .alias("gh")))
-    with_w = base.select(id_col, "__toks", wins.alias("__w"))
+    with_w = base.select(id_col, "__toks", _windows(n).alias("__w"))
     removable = F.filter(
         "__w",
         lambda w: F.exists(

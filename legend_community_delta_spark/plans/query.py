@@ -172,14 +172,7 @@ def plan_sql(model: LegendModel, plan: ServicePlan, table: str,
             select_items.append(f"{_compile_lambda_body(lam, ctx)} as `{alias}`")
     else:
         # bare scan/filter: project every mapped field plus derivations
-        for prop in model.all_properties(cls):
-            col = renames.get(prop.name, prop.name)
-            select_items.append(f"`root`.{col} as `{prop.name}`")
-        dctx = Context(model=model, cls=cls, renames=renames,
-                       style=QUERY_STYLE, guard_nullable=False)
-        for qp in model.all_qualified_properties(cls):
-            if qp.body:
-                select_items.append(f"{to_sql(qp.body[0], dctx)} as `{qp.name}`")
+        select_items = _entity_select(ctx)
 
     head = "select distinct " if plan.distinct else "select "
     sql = head + ", ".join(select_items) + f" from {table} as `root`"
@@ -197,6 +190,17 @@ def plan_sql(model: LegendModel, plan: ServicePlan, table: str,
     return sql
 
 
+def _entity_select(ctx: Context) -> list[str]:
+    """Select items for every mapped field (renamed back to its entity
+    property name) plus every derivation, compiled in *ctx*."""
+    model, cls = ctx.model, ctx.cls
+    items = [f"`root`.{ctx.renames.get(p.name, p.name)} as `{p.name}`"
+             for p in model.all_properties(cls)]
+    items += [f"{to_sql(qp.body[0], ctx)} as `{qp.name}`"
+              for qp in model.all_qualified_properties(cls) if qp.body]
+    return items
+
+
 def mapping_sql(model: LegendModel, mapping: Mapping,
                 expectations: dict[str, str]) -> str:
     """Synthesize the flagship mapping query (``Legend.scala:110-139``):
@@ -207,18 +211,9 @@ def mapping_sql(model: LegendModel, mapping: Mapping,
     over entity property names to avoid its false positives)."""
     cls = model.get_class(mapping.class_path)
     renames = mapping.property_columns
-    ctx = Context(model=model, cls=cls, renames=renames, style=QUERY_STYLE,
-                  guard_nullable=True)
-
-    select_items: list[str] = []
-    for prop in model.all_properties(cls):
-        col = renames.get(prop.name, prop.name)
-        select_items.append(f"`root`.{col} as `{prop.name}`")
-    for qp in model.all_qualified_properties(cls):
-        if qp.body:
-            dctx = Context(model=model, cls=cls, renames=renames,
-                           style=QUERY_STYLE, guard_nullable=False)
-            select_items.append(f"{to_sql(qp.body[0], dctx)} as `{qp.name}`")
+    select_items = _entity_select(Context(
+        model=model, cls=cls, renames=renames, style=QUERY_STYLE,
+        guard_nullable=False))
 
     # applicability: keep expectations whose PURE form references a mapped
     # data property (reference: crude `contains`; Legend.scala:125-127)

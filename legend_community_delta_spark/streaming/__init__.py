@@ -227,34 +227,17 @@ def span_dedup_stream(stream: DataFrame, spark: SparkSession,
     the batch schema ``(id, n_tokens, n_removed, clean_text)``.
     """
     from ..functions.text import unit_array, unit_joiner
+    from ..operators.spans import _windows, read_span_store
 
-    meta = spark.read.parquet(f"{store_path}__meta").first()
-    n = int(meta["n"])
-    # the store footer owns the unit (pre-unit stores were token-built),
-    # so char-level stores flow through the gate with no API change
-    unit = meta["unit"] if "unit" in meta.asDict() else "token"
-    store = spark.read.parquet(store_path)
-    if "unique" in meta.asDict() and meta["unique"]:
-        # meta certifies one row per gh (single overwrite write, no
-        # appends) — the rows ARE the aggregate, skip the exchange (r12)
-        flagged = (store.where(F.col("cnt") >= min_count)
-                   .select("gh", F.lit(1).alias("__dup")))
-    else:
-        flagged = (store.groupBy("gh").agg(F.sum("cnt").alias("__cnt"))
-                   .where(F.col("__cnt") >= min_count)
-                   .select("gh", F.lit(1).alias("__dup")))
+    # the store footer owns n and the unit, so char-level stores flow
+    # through the gate with no API change
+    counts, n, unit = read_span_store(spark, store_path)
+    flagged = (counts.where(F.col("cnt") >= min_count)
+               .select("gh", F.lit(1).alias("__dup")))
     base = stream.select(F.col(id_col).alias("__id"),
                          unit_array(text_col, unit).alias("__toks"))
-    starts = F.when(
-        F.size("__toks") >= n,
-        F.sequence(F.lit(1), F.size("__toks") - F.lit(n - 1)),
-    ).otherwise(F.array().cast("array<int>"))
-    windows = base.select(
-        "__id", "__toks",
-        F.explode_outer(F.transform(starts, lambda s: F.struct(
-            s.alias("s"),
-            F.xxhash64(F.concat_ws("\x1f", F.slice("__toks", s, n)))
-            .alias("gh")))).alias("g"))
+    windows = base.select("__id", "__toks",
+                          F.explode_outer(_windows(n)).alias("g"))
     priced = (windows
               .withColumn("gh", F.col("g.gh"))
               .join(flagged, "gh", "left")

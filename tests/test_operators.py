@@ -650,3 +650,59 @@ def test_pair_store_append_is_idempotent(spark, tmp_path):
     got = sorted((r.id_a, r.id_b) for r in
                  DD.read_pairs(spark, path).collect())
     assert got == [(1, 2), (3, 4), (5, 6)]
+
+
+def _small_docs(spark):
+    return spark.createDataFrame(
+        [(i, f"the quick brown fox jumps over the lazy dog {i % 3} "
+             "again and again") for i in range(8)],
+        "doc_id long, text string")
+
+
+def test_signature_store_ignore_mode_keeps_footer(spark, tmp_path):
+    """mode='ignore' on an existing store writes no signatures, so it
+    must not rewrite the footer either: a 64-hash store re-labelled as
+    32-hash would be banded as 32-long signatures."""
+    docs = _small_docs(spark)
+    path = str(tmp_path / "sigs")
+    DD.write_signature_store(docs, path, num_hashes=64, seed=7)
+    before = spark.read.parquet(f"{path}__meta").collect()
+    DD.write_signature_store(docs, path, num_hashes=32, seed=7,
+                             mode="ignore")
+    assert spark.read.parquet(f"{path}__meta").collect() == before
+    assert {len(r.sig) for r in spark.read.parquet(path).collect()} == {64}
+    with pytest.raises(ValueError, match="built with num_hashes=64"):
+        DD.incremental_minhash_pairs(spark, path, docs, num_hashes=32,
+                                     bands=8, seed=7, append=False)
+
+
+def test_pair_store_ignore_mode_keeps_footer(spark, tmp_path):
+    """mode='ignore' on an existing pair store keeps the footer, so
+    pairs mined at n=5 are never served as n=3 pairs."""
+    path = str(tmp_path / "pairs")
+    pairs = spark.createDataFrame([(1, 2, 0.9)],
+                                  "id_a long, id_b long, jaccard double")
+    DD.write_pair_store(pairs, path, n=5, threshold=0.2)
+    DD.write_pair_store(pairs, path, n=3, threshold=0.5, mode="ignore")
+    meta = spark.read.parquet(f"{path}__meta").first()
+    assert (meta.n, meta.threshold) == (5, 0.2)
+    with pytest.raises(ValueError, match="n=5"):
+        DD.read_pairs(spark, path, n=3)
+    assert DD.read_pairs(spark, path, n=5, threshold=0.2).count() == 1
+
+
+def test_append_over_unreadable_footer_raises(spark, tmp_path):
+    """A footer that cannot be read is an error, not "no footer": the
+    append must fail before writing instead of skipping its check."""
+    import glob
+
+    docs = _small_docs(spark)
+    path = str(tmp_path / "sigs")
+    DD.write_signature_store(docs, path, num_hashes=64, seed=7)
+    for f in glob.glob(f"{path}__meta/*.parquet"):
+        with open(f, "wb") as fh:
+            fh.write(b"not a parquet file" * 8)
+    with pytest.raises(Exception, match="__meta"):
+        DD.write_signature_store(docs, path, num_hashes=32, seed=7,
+                                 mode="append")
+    assert {len(r.sig) for r in spark.read.parquet(path).collect()} == {64}
