@@ -7,11 +7,11 @@ Five families, each picked for a different scale/precision point:
 * :func:`minhash_dedup` — MinHash + LSH banding.  Narrow map to compute
   signatures (no explode-shuffle), then one shuffle per *candidate* band
   bucket — the standard sub-quadratic near-dup path for 100 TB corpora.
-* :func:`simhash` / :func:`simhash_dedup` — 64-bit SimHash; near-dups =
-  hamming distance <= k, candidates via 16-bit chunk banding.
-* :func:`ngram_jaccard_pairs` — exact n-gram Jaccard via shingle
-  self-join; quadratic in bucket size, meant for verification / small
-  slices, and as the verifier behind the MinHash candidates.
+* :func:`simhash_df` / :func:`simhash_dedup` — 64-bit SimHash; near-dups
+  = hamming distance <= k, candidates via 16-bit chunk banding.
+* :func:`ngram_jaccard_pairs` — exact n-gram Jaccard: AllPairs/PPJoin
+  prefix-filtered candidates, verified per pair; the same verify stage
+  checks the MinHash candidates of :func:`verified_near_dup_pairs`.
 * :func:`embedding_dedup` — semantic near-dup over embedding vectors
   (cosine >= threshold), LSH-bucketed.
 
@@ -347,29 +347,6 @@ def incremental_minhash_pairs(spark, path: str, new_docs: DataFrame,
     return out
 
 
-def simhash(text_col: str, ngram: int = 2, bits: int = 64) -> F.Column:
-    """64-bit SimHash over word n-gram hashes (long column, codegen-only).
-
-    One per-bit majority vote expression per bit — a wide expression tree,
-    but a *narrow* plan: a single projection over the scan, no shuffle.
-    """
-    hashes = F.transform(word_ngrams(text_col, ngram), lambda g: F.xxhash64(g))
-
-    def vote(b: int) -> F.Column:
-        return F.aggregate(
-            hashes, F.lit(0),
-            lambda acc, h: acc + F.when(
-                F.shiftright(h, b).bitwiseAND(F.lit(1)) == 1,
-                F.lit(1)).otherwise(F.lit(-1)))
-
-    out = F.lit(0).cast("long")
-    for b in range(bits):
-        out = out.bitwiseOR(
-            F.when(vote(b) > 0, F.shiftleft(F.lit(1).cast("long"), b))
-            .otherwise(F.lit(0).cast("long")))
-    return out
-
-
 def simhash_df(df: DataFrame, text_col: str = "text", id_col: str = "doc_id",
                ngram: int = 2, bits: int = 64,
                hash: str = "xxhash64") -> DataFrame:
@@ -473,109 +450,127 @@ def simhash_dedup(df: DataFrame, text_col: str = "text", id_col: str = "doc_id",
                          chunk_bits=chunk_bits)
 
 
-def ngram_jaccard_pairs(df: DataFrame, text_col: str = "text",
-                        id_col: str = "doc_id", n: int = 3,
-                        threshold: float = 0.5,
-                        method: str = "prefix") -> DataFrame:
-    """Exact word-n-gram Jaccard similarity for all qualifying pairs.
+def _grams(df: DataFrame, text_col: str, id_col: str, n: int) -> DataFrame:
+    """``(__id, gram)``: one row per distinct word n-gram of each doc."""
+    return df.select(F.col(id_col).alias("__id"),
+                     F.explode(F.array_distinct(word_ngrams(text_col, n)))
+                     .alias("gram"))
 
-    Deterministic (integer set math + one double division) — this one IS
-    SQL-expressible, so it carries a duckdb oracle in the harness.  Two
-    plans, byte-identical output (pinned in tests):
 
-    * ``"prefix"`` (default) — AllPairs/PPJoin prefix filtering
-      [Bayardo et al., WWW'07; Chaudhuri et al., ICDE'06]: order grams
-      globally by (document frequency asc, gram), and join docs only on
-      the first ``|G| - ceil(t*|G|) + 1`` rarest grams of each side —
-      any pair with Jaccard >= t provably shares a gram in both
-      prefixes.  Hot template grams sort LAST, so they never generate
-      candidates: the quadratic hot-bucket blowup of the naive gram
-      join is gone while the result stays exact.  Size and positional
-      filters (PPJoin) prune candidates further — see inline comments;
-      all three filters are provably lossless.  Candidates are then
-      verified with per-pair ``array_intersect`` over hashed-gram
-      arrays (bounded by doc length, no gram shuffle).
-    * ``"bucket"`` — the naive gram self-join; quadratic in shared-gram
-      bucket size.  Kept as the oracle-shaped reference plan and for
-      corpora whose gram-frequency profile is flat (prefix filtering
-      buys little there and spends two extra shuffles).
-
-    NOTE (measured): hashing grams to xxhash64 longs before the
-    bucket-method self-join was tried and REVERTED — at sf0.1 it ran
-    7.2-9.1 s vs 5.9-8.2 s for string grams: the per-gram hash costs
-    more than the shorter shuffle keys save when grams are short and
-    template-heavy.  (The prefix method's verify stage DOES hash —
-    there the arrays travel once per candidate pair, not once per
-    gram occurrence, so key width dominates.)
-    """
-    if method == "bucket":
-        return _ngram_jaccard_bucket(df, text_col, id_col, n, threshold)
-    if method != "prefix":
-        raise ValueError(f"unknown method [{method}]; "
-                         "expected 'prefix' or 'bucket'")
-    grams = (df.select(F.col(id_col).alias("__id"),
-                       F.explode(F.array_distinct(word_ngrams(text_col, n)))
-                       .alias("gram")))
+def _ranked_grams(grams: DataFrame, by: list[str]) -> DataFrame:
+    """*grams* with ``__rn``, each gram's rank inside its doc (keyed by
+    *by*) in the global (document frequency asc, gram) order, and
+    ``__ng``, the doc's distinct-gram count."""
     # document frequency as a window count over the SAME gram exchange
     # the old groupBy+join-back paid twice (r12, guide §2.4: two
     # operations keyed the same way share one exchange) — identical
-    # (__id, gram, __df) rows, one shuffle fewer
-    w_doc = Window.partitionBy("__id").orderBy("__df", "gram")
-    ranked = (grams
-              .withColumn("__df", F.count(F.lit(1))
-                          .over(Window.partitionBy("gram")))
-              .select("__id", "gram", "__df",
-                      F.row_number().over(w_doc).alias("__rn"),
-                      F.count(F.lit(1)).over(Window.partitionBy("__id"))
-                      .alias("__ng"))
-              .drop("__df"))
+    # (doc, gram, __df) rows, one shuffle fewer
+    w_doc = Window.partitionBy(*by).orderBy("__df", "gram")
+    return (grams
+            .withColumn("__df", F.count(F.lit(1))
+                        .over(Window.partitionBy("gram")))
+            .select(*by, "gram", "__df",
+                    F.row_number().over(w_doc).alias("__rn"),
+                    F.count(F.lit(1)).over(Window.partitionBy(*by))
+                    .alias("__ng"))
+            .drop("__df"))
+
+
+def _prefix(ranked: DataFrame, t: float) -> DataFrame:
+    """The rows of each doc's first ``|G| - ceil(t*|G|) + 1`` rarest
+    grams: if every common gram of a pair sat outside that prefix, the
+    overlap could be at most ``ceil(t*|G|) - 1 < t*|G|``."""
     # ceil guards against double rounding (0.3*10 = 3.0000000000000004
     # would shorten the prefix by one and MISS true pairs; the epsilon
     # can only lengthen it, which stays exact).
-    pref = ranked.where(
+    return ranked.where(
         F.col("__rn") <= F.col("__ng")
-        - F.ceil(F.lit(threshold) * F.col("__ng") - F.lit(1e-9)) + 1)
-    # Size filter (also exact): J(A,B) <= min(|G|)/max(|G|), so pairs
-    # whose gram-set sizes differ beyond the threshold ratio are pruned
-    # at candidate generation, before the dedup + verify stages.
-    # Positional filter (PPJoin, also exact): a match at rank i of |A|
-    # and rank j of |B| can contribute at most 1 + min(|A|-i, |B|-j)
-    # overlap; J >= t needs overlap >= t/(1+t)*(|A|+|B|).  A true pair
-    # always survives via its FIRST common gram (every common gram
-    # ranks at or after it on both sides), so dropping rows that fail
-    # the bound before dedup loses no pair.
-    ov_req = (F.lit(threshold / (1.0 + threshold))
+        - F.ceil(F.lit(t) * F.col("__ng") - F.lit(1e-9)) + 1)
+
+
+def _side(pref: DataFrame, out_id: str, s: str) -> DataFrame:
+    """One side of a prefix join: ``(out_id, __n<s>, __r<s>, gram)``."""
+    return pref.select(F.col("__id").alias(out_id),
+                       F.col("__ng").alias(f"__n{s}"),
+                       F.col("__rn").alias(f"__r{s}"), "gram")
+
+
+def _jaccard_bounds(t: float) -> F.Column:
+    """The size and positional filters of a symmetric prefix join over
+    ``(__na, __ra)`` x ``(__nb, __rb)`` — both exact."""
+    # Size filter: J(A,B) <= min(|G|)/max(|G|), so pairs whose gram-set
+    # sizes differ beyond the threshold ratio are pruned at candidate
+    # generation, before the dedup + verify stages.
+    # Positional filter (PPJoin): a match at rank i of |A| and rank j of
+    # |B| can contribute at most 1 + min(|A|-i, |B|-j) overlap; J >= t
+    # needs overlap >= t/(1+t)*(|A|+|B|).  A true pair always survives
+    # via its FIRST common gram (every common gram ranks at or after it
+    # on both sides), so dropping rows that fail the bound before dedup
+    # loses no pair.
+    ov_req = (F.lit(t / (1.0 + t))
               * (F.col("__na") + F.col("__nb")) - F.lit(1e-9))
-    cands = (pref.select(F.col("__id").alias("id_a"),
-                         F.col("__ng").alias("__na"),
-                         F.col("__rn").alias("__ra"), "gram")
-             .join(pref.select(F.col("__id").alias("id_b"),
-                               F.col("__ng").alias("__nb"),
-                               F.col("__rn").alias("__rb"), "gram"), "gram")
+    return ((F.least("__na", "__nb")
+             >= F.lit(t) * F.greatest("__na", "__nb") - F.lit(1e-9))
+            & (F.lit(1) + F.least(F.col("__na") - F.col("__ra"),
+                                  F.col("__nb") - F.col("__rb"))
+               >= ov_req))
+
+
+def _verify(cands: DataFrame, left: DataFrame, right: DataFrame,
+            text_col: str, id_col: str, n: int, threshold: float,
+            a: str, b: str, measure: str = "jaccard") -> DataFrame:
+    """``(a, b, measure)`` for the candidate pairs ``(a, b)`` whose exact
+    *measure* (``"jaccard"``, or ``"containment"`` of *a* in *b*)
+    reaches *threshold*: set math over each side's distinct-gram hash
+    array — ``array_intersect`` on longs, JVM-side, per-pair cost
+    bounded by doc length, no gram shuffle."""
+    def garr(df: DataFrame, out_id: str, out_g: str) -> DataFrame:
+        return df.select(
+            F.col(id_col).alias(out_id),
+            F.array_distinct(F.transform(word_ngrams(text_col, n),
+                                         lambda g: F.xxhash64(g)))
+            .alias(out_g))
+
+    inter = F.size(F.array_intersect("__ga", "__gb"))
+    denom = (F.size("__ga") if measure == "containment"
+             else F.size("__ga") + F.size("__gb") - inter)
+    return (cands.join(garr(left, a, "__ga"), a)
+            .join(garr(right, b, "__gb"), b)
+            .withColumn(measure, inter.cast("double") / denom)
+            .where(F.col(measure) >= threshold)
+            .select(a, b, measure))
+
+
+def ngram_jaccard_pairs(df: DataFrame, text_col: str = "text",
+                        id_col: str = "doc_id", n: int = 3,
+                        threshold: float = 0.5) -> DataFrame:
+    """Exact word-n-gram Jaccard similarity for all qualifying pairs.
+
+    Deterministic (integer set math + one double division) — this one IS
+    SQL-expressible, so it carries a duckdb oracle in the harness.
+
+    AllPairs/PPJoin prefix filtering [Bayardo et al., WWW'07; Chaudhuri
+    et al., ICDE'06]: order grams globally by (document frequency asc,
+    gram), and join docs only on the first ``|G| - ceil(t*|G|) + 1``
+    rarest grams of each side — any pair with Jaccard >= t provably
+    shares a gram in both prefixes.  Hot template grams sort LAST, so
+    they never generate candidates: the quadratic hot-bucket blowup of
+    the naive gram join is gone while the result stays exact.  Size and
+    positional filters (PPJoin) prune candidates further; all three
+    filters are provably lossless.  Candidates are then verified with
+    per-pair ``array_intersect`` over hashed-gram arrays.  The naive
+    gram self-join, ``_ngram_jaccard_bucket``, is the reference plan the
+    tests pin this one against.
+    """
+    pref = _prefix(_ranked_grams(_grams(df, text_col, id_col, n),
+                                 ["__id"]), threshold)
+    cands = (_side(pref, "id_a", "a").join(_side(pref, "id_b", "b"), "gram")
              .where((F.col("id_a") < F.col("id_b"))
-                    & (F.least("__na", "__nb")
-                       >= F.lit(threshold) * F.greatest("__na", "__nb")
-                       - F.lit(1e-9))
-                    & (F.lit(1) + F.least(F.col("__na") - F.col("__ra"),
-                                          F.col("__nb") - F.col("__rb"))
-                       >= ov_req))
+                    & _jaccard_bounds(threshold))
              .select("id_a", "id_b")
              .dropDuplicates(["id_a", "id_b"]))
-    garr = df.select(
-        F.col(id_col).alias("__id"),
-        F.array_distinct(F.transform(word_ngrams(text_col, n),
-                                     lambda g: F.xxhash64(g)))
-        .alias("__grams"))
-    ga = garr.select(F.col("__id").alias("id_a"),
-                     F.col("__grams").alias("__ga"))
-    gb = garr.select(F.col("__id").alias("id_b"),
-                     F.col("__grams").alias("__gb"))
-    inter = F.size(F.array_intersect("__ga", "__gb"))
-    union = F.size("__ga") + F.size("__gb") - inter
-    return (cands.join(ga, "id_a").join(gb, "id_b")
-            .withColumn("jaccard", inter.cast("double") / union)
-            .where(F.col("jaccard") >= threshold)
-            .select("id_a", "id_b", "jaccard"))
+    return _verify(cands, df, df, text_col, id_col, n, threshold,
+                   "id_a", "id_b")
 
 
 def containment_pairs(df: DataFrame, text_col: str = "text",
@@ -592,43 +587,18 @@ def containment_pairs(df: DataFrame, text_col: str = "text",
     doc** (both directions emitted when containment is mutual).
 
     Scale shape — the asymmetric variant of the AllPairs prefix filter:
-    only the CONTAINED side is prefix-reduced (first
-    ``|G_A| - ceil(t*|G_A|) + 1`` globally-rarest grams; if every
-    common gram sat outside that prefix, the overlap could be at most
-    ``ceil(t*|G_A|) - 1 < t*|G_A|`` — so a true pair always meets the
-    join), the container side joins on ALL its grams.  Candidates are
-    pruned by the exact size bound ``|G_B| >= t*|G_A|`` (overlap can't
-    exceed ``|G_B|``) and the positional bound ``1 + |G_A| - rank_A >=
-    t*|G_A|``, then verified with per-pair ``array_intersect`` over
-    hashed-gram arrays.  Hot template grams rank last and never enter
-    the A-side prefix, so the candidate join stays sub-quadratic on
-    skewed corpora.
+    only the CONTAINED side is prefix-reduced (its ``|G_A| -
+    ceil(t*|G_A|) + 1`` globally-rarest grams), the container side joins
+    on ALL its grams.  Candidates are pruned by the exact size bound
+    ``|G_B| >= t*|G_A|`` (overlap can't exceed ``|G_B|``) and the
+    positional bound ``1 + |G_A| - rank_A >= t*|G_A|``, then verified
+    with per-pair ``array_intersect`` over hashed-gram arrays.  Hot
+    template grams rank last and never enter the A-side prefix, so the
+    candidate join stays sub-quadratic on skewed corpora.
     """
-    grams = (df.select(F.col(id_col).alias("__id"),
-                       F.explode(F.array_distinct(word_ngrams(text_col, n)))
-                       .alias("gram")))
-    # document frequency as a window count over the SAME gram exchange
-    # the old groupBy+join-back paid twice (r12, guide §2.4: two
-    # operations keyed the same way share one exchange) — identical
-    # (__id, gram, __df) rows, one shuffle fewer
-    w_doc = Window.partitionBy("__id").orderBy("__df", "gram")
-    ranked = (grams
-              .withColumn("__df", F.count(F.lit(1))
-                          .over(Window.partitionBy("gram")))
-              .select("__id", "gram", "__df",
-                      F.row_number().over(w_doc).alias("__rn"),
-                      F.count(F.lit(1)).over(Window.partitionBy("__id"))
-                      .alias("__ng"))
-              .drop("__df"))
-    pref_a = ranked.where(
-        F.col("__rn") <= F.col("__ng")
-        - F.ceil(F.lit(threshold) * F.col("__ng") - F.lit(1e-9)) + 1)
-    cands = (pref_a.select(F.col("__id").alias("id_a"),
-                           F.col("__ng").alias("__na"),
-                           F.col("__rn").alias("__ra"), "gram")
-             .join(ranked.select(F.col("__id").alias("id_b"),
-                                 F.col("__ng").alias("__nb"), "gram"),
-                   "gram")
+    ranked = _ranked_grams(_grams(df, text_col, id_col, n), ["__id"])
+    cands = (_side(_prefix(ranked, threshold), "id_a", "a")
+             .join(_side(ranked, "id_b", "b"), "gram")
              .where((F.col("id_a") != F.col("id_b"))
                     & (F.col("__nb")
                        >= F.lit(threshold) * F.col("__na") - F.lit(1e-9))
@@ -636,29 +606,24 @@ def containment_pairs(df: DataFrame, text_col: str = "text",
                        >= F.lit(threshold) * F.col("__na") - F.lit(1e-9)))
              .select("id_a", "id_b")
              .dropDuplicates(["id_a", "id_b"]))
-    garr = df.select(
-        F.col(id_col).alias("__id"),
-        F.array_distinct(F.transform(word_ngrams(text_col, n),
-                                     lambda g: F.xxhash64(g)))
-        .alias("__grams"))
-    ga = garr.select(F.col("__id").alias("id_a"),
-                     F.col("__grams").alias("__ga"))
-    gb = garr.select(F.col("__id").alias("id_b"),
-                     F.col("__grams").alias("__gb"))
-    inter = F.size(F.array_intersect("__ga", "__gb"))
-    return (cands.join(ga, "id_a").join(gb, "id_b")
-            .withColumn("containment",
-                        inter.cast("double") / F.size("__ga"))
-            .where(F.col("containment") >= threshold)
-            .select("id_a", "id_b", "containment"))
+    return _verify(cands, df, df, text_col, id_col, n, threshold,
+                   "id_a", "id_b", "containment")
 
 
 def _ngram_jaccard_bucket(df: DataFrame, text_col: str, id_col: str,
                           n: int, threshold: float) -> DataFrame:
-    """The naive exact plan: gram self-join + per-pair counting."""
-    grams = (df.select(F.col(id_col).alias("__id"),
-                       F.explode(F.array_distinct(word_ngrams(text_col, n)))
-                       .alias("gram")))
+    """The naive exact plan: gram self-join + per-pair counting;
+    quadratic in shared-gram bucket size.  The tests pin
+    :func:`ngram_jaccard_pairs` against it.
+
+    NOTE (measured): hashing grams to xxhash64 longs before this
+    self-join was tried and REVERTED — at sf0.1 it ran 7.2-9.1 s vs
+    5.9-8.2 s for string grams: the per-gram hash costs more than the
+    shorter shuffle keys save when grams are short and template-heavy.
+    (The prefix plan's verify stage DOES hash — there the arrays travel
+    once per candidate pair, not once per gram occurrence, so key width
+    dominates.)"""
+    grams = _grams(df, text_col, id_col, n)
     sizes = grams.groupBy("__id").agg(F.count(F.lit(1)).alias("n_grams"))
     # NOTE (measured): pre-filtering singleton grams with a count>=2
     # semi-join before the self-join was tried and REVERTED — on corpora
@@ -702,64 +667,19 @@ def cross_ngram_jaccard_pairs(left: DataFrame, right: DataFrame,
     drop contaminated training docs" step, anti-join ``left`` on
     ``id_left``.
     """
-    sides = []
-    for tag, df in (("l", left), ("r", right)):
-        sides.append(df.select(F.lit(tag).alias("__side"),
-                               F.col(id_col).alias("__id"),
-                               F.explode(F.array_distinct(
-                                   word_ngrams(text_col, n))).alias("gram")))
-    grams = sides[0].unionByName(sides[1])
-    # document frequency via a window count over the gram exchange
-    # instead of groupBy + join-back (r12, guide §2.4) — identical rows,
-    # one shuffle fewer; the order stays computed over the UNION
-    w_doc = Window.partitionBy("__side", "__id").orderBy("__df", "gram")
-    ranked = (grams
-              .withColumn("__df", F.count(F.lit(1))
-                          .over(Window.partitionBy("gram")))
-              .select("__side", "__id", "gram", "__df",
-                      F.row_number().over(w_doc).alias("__rn"),
-                      F.count(F.lit(1))
-                      .over(Window.partitionBy("__side", "__id"))
-                      .alias("__ng"))
-              .drop("__df"))
-    pref = ranked.where(
-        F.col("__rn") <= F.col("__ng")
-        - F.ceil(F.lit(threshold) * F.col("__ng") - F.lit(1e-9)) + 1)
-    ov_req = (F.lit(threshold / (1.0 + threshold))
-              * (F.col("__na") + F.col("__nb")) - F.lit(1e-9))
-    cands = (pref.where(F.col("__side") == "l")
-             .select(F.col("__id").alias("id_left"),
-                     F.col("__ng").alias("__na"),
-                     F.col("__rn").alias("__ra"), "gram")
-             .join(pref.where(F.col("__side") == "r")
-                   .select(F.col("__id").alias("id_right"),
-                           F.col("__ng").alias("__nb"),
-                           F.col("__rn").alias("__rb"), "gram"), "gram")
-             .where((F.least("__na", "__nb")
-                     >= F.lit(threshold) * F.greatest("__na", "__nb")
-                     - F.lit(1e-9))
-                    # positional filter — see ngram_jaccard_pairs
-                    & (F.lit(1) + F.least(F.col("__na") - F.col("__ra"),
-                                          F.col("__nb") - F.col("__rb"))
-                       >= ov_req))
+    lg, rg = (_grams(d, text_col, id_col, n)
+              .select(F.lit(tag).alias("__side"), "__id", "gram")
+              for tag, d in (("l", left), ("r", right)))
+    pref = _prefix(_ranked_grams(lg.unionByName(rg), ["__side", "__id"]),
+                   threshold)
+    cands = (_side(pref.where(F.col("__side") == "l"), "id_left", "a")
+             .join(_side(pref.where(F.col("__side") == "r"),
+                         "id_right", "b"), "gram")
+             .where(_jaccard_bounds(threshold))
              .select("id_left", "id_right")
              .dropDuplicates(["id_left", "id_right"]))
-
-    def _garr(df: DataFrame, out_id: str, out_g: str) -> DataFrame:
-        return df.select(
-            F.col(id_col).alias(out_id),
-            F.array_distinct(F.transform(word_ngrams(text_col, n),
-                                         lambda g: F.xxhash64(g)))
-            .alias(out_g))
-
-    ga = _garr(left, "id_left", "__ga")
-    gb = _garr(right, "id_right", "__gb")
-    inter = F.size(F.array_intersect("__ga", "__gb"))
-    union = F.size("__ga") + F.size("__gb") - inter
-    return (cands.join(ga, "id_left").join(gb, "id_right")
-            .withColumn("jaccard", inter.cast("double") / union)
-            .where(F.col("jaccard") >= threshold)
-            .select("id_left", "id_right", "jaccard"))
+    return _verify(cands, left, right, text_col, id_col, n, threshold,
+                   "id_left", "id_right")
 
 
 def contamination_report(train: DataFrame, eval_df: DataFrame,
@@ -779,11 +699,8 @@ def contamination_report(train: DataFrame, eval_df: DataFrame,
 
     Returns ``(id, n_grams, n_hit, contamination_frac)``.
     """
-    eg = eval_df.select(F.col(id_col).alias("__id"),
-                        F.explode(F.array_distinct(
-                            word_ngrams(text_col, n))).alias("gram"))
-    tg = (train.select(F.explode(F.array_distinct(
-        word_ngrams(text_col, n))).alias("gram")).distinct())
+    eg = _grams(eval_df, text_col, id_col, n)
+    tg = _grams(train, text_col, id_col, n).select("gram").distinct()
     totals = eg.groupBy("__id").agg(F.count(F.lit(1)).alias("n_grams"))
     hits = (eg.join(tg, "gram", "left_semi")
             .groupBy("__id").agg(F.count(F.lit(1)).alias("n_hit")))
@@ -906,21 +823,8 @@ def verified_near_dup_pairs(df: DataFrame, text_col: str = "text",
     cands = minhash_dedup(df, text_col, id_col, num_hashes, bands,
                           shingle_k, candidate_threshold, seed,
                           max_bucket).select("id_a", "id_b")
-    grams = df.select(
-        F.col(id_col).alias("__id"),
-        F.array_distinct(F.transform(word_ngrams(text_col, n),
-                                     lambda g: F.xxhash64(g)))
-        .alias("__grams"))
-    ga = grams.select(F.col("__id").alias("id_a"),
-                      F.col("__grams").alias("__ga"))
-    gb = grams.select(F.col("__id").alias("id_b"),
-                      F.col("__grams").alias("__gb"))
-    inter = F.size(F.array_intersect("__ga", "__gb"))
-    union = F.size("__ga") + F.size("__gb") - inter
-    return (cands.join(ga, "id_a").join(gb, "id_b")
-            .withColumn("jaccard", inter.cast("double") / union)
-            .where(F.col("jaccard") >= threshold)
-            .select("id_a", "id_b", "jaccard"))
+    return _verify(cands, df, df, text_col, id_col, n, threshold,
+                   "id_a", "id_b")
 
 
 def write_pair_store(pairs: DataFrame, path: str, *,

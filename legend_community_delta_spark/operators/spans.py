@@ -66,28 +66,35 @@ def _window_grams(base: DataFrame, id_col: str, n: int) -> DataFrame:
     ).select(id_col, F.col("g.s").alias("s"), F.col("g.gh").alias("gh"))
 
 
-def _rebuild(base: DataFrame, grams: DataFrame, flagged_gh: DataFrame,
-             id_col: str, n: int, unit: str) -> DataFrame:
-    """``(id, n_tokens, n_removed, clean_text)``: each doc of *base*
-    minus every unit covered by one of its *grams* windows whose hash is
-    in *flagged_gh*."""
-    flagged = (grams.join(flagged_gh, "gh")
-               .groupBy(id_col)
-               .agg(F.collect_set("s").alias("__starts")))
-    joined = base.join(flagged, id_col, "left")
-    starts = F.coalesce(F.col("__starts"), F.array().cast("array<int>"))
+def _cleaned(id_col: F.Column, starts: F.Column, n: int,
+             unit: str) -> list[F.Column]:
+    """``[id, n_tokens, n_removed, clean_text]`` over the ``__toks``
+    column: every unit covered by an n-unit window starting at one of
+    the 1-based *starts* removed — the one cover rule of every span
+    operator."""
     kept = F.filter(
         "__toks",
         lambda t, i: ~F.exists(
             starts, lambda s: (i + 1 >= s) & (i + 1 <= s + F.lit(n - 1))
         ),
     )
-    return joined.select(
-        F.col(id_col),
+    return [
+        id_col,
         F.size("__toks").alias("n_tokens"),
         (F.size("__toks") - F.size(kept)).alias("n_removed"),
         F.concat_ws(TX.unit_joiner(unit), kept).alias("clean_text"),
-    )
+    ]
+
+
+def _rebuild(base: DataFrame, starts_df: DataFrame, id_col: str, n: int,
+             unit: str) -> DataFrame:
+    """``(id, n_tokens, n_removed, clean_text)``: each doc of *base*
+    cleaned of the windows at its ``(id, s)`` rows in *starts_df*."""
+    flagged = (starts_df.groupBy(id_col)
+               .agg(F.collect_set("s").alias("__starts")))
+    starts = F.coalesce(F.col("__starts"), F.array().cast("array<int>"))
+    return (base.join(flagged, id_col, "left")
+            .select(*_cleaned(F.col(id_col), starts, n, unit)))
 
 
 def duplicate_span_stats(
@@ -124,7 +131,8 @@ def duplicate_span_stats(
         .where(F.col("__cnt") >= min_count)
         .select("gh")
     )
-    return _rebuild(base, grams, flagged_windows, id_col, n, unit)
+    return _rebuild(base, grams.join(flagged_windows, "gh"), id_col, n,
+                    unit)
 
 
 def dedup_spans(
@@ -232,7 +240,7 @@ def incremental_dup_spans(spark, path: str, new_docs: DataFrame,
                              + F.coalesce("cnt", F.lit(0))).alias("__cnt"))
               .where(F.col("__cnt") >= min_count)
               .select("gh"))
-    return _rebuild(base, grams, merged, id_col, n, unit)
+    return _rebuild(base, grams.join(merged, "gh"), id_col, n, unit)
 
 
 def intra_doc_dup_spans(
@@ -271,14 +279,7 @@ def intra_doc_dup_spans(
         lambda w: F.exists(
             "__w",
             lambda v: (v["gh"] == w["gh"]) & (v["s"] <= w["s"] - n)))
-    with_r = with_w.select(id_col, "__toks", removable.alias("__r"))
-    kept = F.filter(
-        "__toks",
-        lambda t, i: ~F.exists(
-            "__r",
-            lambda r: (i + 1 >= r["s"]) & (i + 1 <= r["s"] + F.lit(n - 1))))
-    return with_r.select(
-        F.col(id_col),
-        F.size("__toks").alias("n_tokens"),
-        (F.size("__toks") - F.size(kept)).alias("n_removed"),
-        F.concat_ws(TX.unit_joiner(unit), kept).alias("clean_text"))
+    with_r = with_w.select(
+        id_col, "__toks",
+        F.transform(removable, lambda w: w["s"]).alias("__r"))
+    return with_r.select(*_cleaned(F.col(id_col), F.col("__r"), n, unit))

@@ -49,6 +49,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window, functions as F
 
 from ..functions import text as TX
+from .spans import _rebuild
 
 
 def _rank_buckets(df: DataFrame) -> int:
@@ -526,22 +527,7 @@ def exact_span_stats(df: DataFrame, text_col: str = "text",
         wins = (wins.join(canon, ["w1", "w2"])
                 .where(~((F.col(id_col) == F.col("__c")[id_col])
                          & (F.col("s") == F.col("__c")["s"]))))
-    flagged = (wins.groupBy(id_col)
-               .agg(F.collect_set("s").alias("__starts")))
-    joined = base.join(flagged, id_col, "left")
-    starts = F.coalesce(F.col("__starts"), F.array().cast("array<int>"))
-    kept = F.filter(
-        "__toks",
-        lambda t, i: ~F.exists(
-            starts, lambda s: (i + 1 >= s) & (i + 1 <= s + F.lit(n - 1))
-        ),
-    )
-    return joined.select(
-        F.col(id_col),
-        F.size("__toks").alias("n_tokens"),
-        (F.size("__toks") - F.size(kept)).alias("n_removed"),
-        F.concat_ws(_unit_joiner(unit), kept).alias("clean_text"),
-    )
+    return _rebuild(base, wins, id_col, n, unit)
 
 
 def top_dup_windows(df: DataFrame, text_col: str = "text",
@@ -657,22 +643,7 @@ def exact_decontaminate(train: DataFrame, eval_df: DataFrame,
     base = eval_df.select(
         F.col(id_col),
         _unit_array(F.col(text_col), unit).alias("__toks"))
-    flagged = (spans.groupBy(id_col)
-               .agg(F.collect_set("s").alias("__starts")))
-    joined = base.join(flagged, id_col, "left")
-    starts = F.coalesce(F.col("__starts"), F.array().cast("array<int>"))
-    kept = F.filter(
-        "__toks",
-        lambda t, i: ~F.exists(
-            starts, lambda s: (i + 1 >= s) & (i + 1 <= s + F.lit(n - 1))
-        ),
-    )
-    return joined.select(
-        F.col(id_col),
-        F.size("__toks").alias("n_tokens"),
-        (F.size("__toks") - F.size(kept)).alias("n_removed"),
-        F.concat_ws(_unit_joiner(unit), kept).alias("clean_text"),
-    )
+    return _rebuild(base, spans, id_col, n, unit)
 
 
 def longest_dup_prefix(df: DataFrame, text_col: str = "text",

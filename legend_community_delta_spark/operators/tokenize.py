@@ -334,22 +334,8 @@ def unigram_seed_vocab(df: DataFrame, text_col: str = "text",
 
     Returns ``(piece, logp)`` with probabilities initialized
     proportional to substring counts (the standard init)."""
-    wf = word_freqs(df, text_col)
-    subs = (wf.select(
-        "freq",
-        F.explode(_substr_candidates(F.col("word"), max_piece_len))
-        .alias("c"))
-        .select(F.col("c.sub").alias("piece"), "freq")
-        .groupBy("piece").agg(F.sum("freq").alias("n")))
-    chars = subs.where(F.length("piece") == 1)
-    top = (subs.where(F.length("piece") > 1)
-           .orderBy(F.desc("n"), "piece").limit(seed_size))
-    seeded = chars.unionByName(top)
-    total = seeded.agg(F.sum("n").alias("__t"))
-    return (seeded.crossJoin(F.broadcast(total))
-            .select("piece",
-                    (F.log(F.col("n").cast("double"))
-                     - F.log(F.col("__t").cast("double"))).alias("logp")))
+    return _seed_from_words(word_freqs(df, text_col), max_piece_len,
+                            seed_size)
 
 
 def _word_edges(words: DataFrame, pieces: DataFrame,
@@ -475,9 +461,6 @@ def unigram_train(df: DataFrame, text_col: str = "text",
     words = (word_freqs(df, text_col)
              .where(F.length("word") <= max_word_len)
              .localCheckpoint(eager=True))
-    # seed straight from the (word, freq) table — unigram_seed_vocab
-    # re-derives word freqs from a raw text column and is the
-    # public entry point for ad-hoc use
     pieces = _seed_from_words(words, max_piece_len, seed_size)
     n_chars = pieces.where(F.length("piece") == 1).count()
     while True:

@@ -226,8 +226,8 @@ def span_dedup_stream(stream: DataFrame, spark: SparkSession,
     operator exactly — that equality is the contract oracle.  Returns
     the batch schema ``(id, n_tokens, n_removed, clean_text)``.
     """
-    from ..functions.text import unit_array, unit_joiner
-    from ..operators.spans import _windows, read_span_store
+    from ..functions.text import unit_array
+    from ..operators.spans import _cleaned, _windows, read_span_store
 
     # the store footer owns n and the unit, so char-level stores flow
     # through the gate with no API change
@@ -245,16 +245,8 @@ def span_dedup_stream(stream: DataFrame, spark: SparkSession,
               .agg(F.first("__toks").alias("__toks"),
                    F.collect_set(F.when(F.col("__dup") == 1, F.col("g.s")))
                    .alias("__starts")))
-    kept = F.filter(
-        "__toks",
-        lambda t, i: ~F.exists(
-            F.col("__starts"),
-            lambda s: (i + 1 >= s) & (i + 1 <= s + F.lit(n - 1))))
-    return priced.select(
-        F.col("__id").alias(id_col),
-        F.size("__toks").alias("n_tokens"),
-        (F.size("__toks") - F.size(kept)).alias("n_removed"),
-        F.concat_ws(unit_joiner(unit), kept).alias("clean_text"))
+    return priced.select(*_cleaned(F.col("__id").alias(id_col),
+                                   F.col("__starts"), n, unit))
 
 
 def nb_score_stream(stream: DataFrame, model_wide: DataFrame,

@@ -131,15 +131,14 @@ def test_ngram_jaccard_prefix_equals_bucket(spark):
             " terms of service privacy policy all rights reserved")))
     for df, n, t in ((docs, 5, 0.2), (docs, 3, 0.3), (boiler, 5, 0.5)):
         got = {}
-        for method in ("prefix", "bucket"):
-            got[method] = {
-                (r["id_a"], r["id_b"]): round(r["jaccard"], 9)
-                for r in DD.ngram_jaccard_pairs(
-                    df, n=n, threshold=t, method=method).collect()}
+        for method, pairs in (
+                ("prefix", DD.ngram_jaccard_pairs(df, n=n, threshold=t)),
+                ("bucket", DD._ngram_jaccard_bucket(df, "text", "doc_id",
+                                                    n, t))):
+            got[method] = {(r["id_a"], r["id_b"]): round(r["jaccard"], 9)
+                           for r in pairs.collect()}
         assert got["prefix"], f"no pairs at n={n} t={t}"
         assert got["prefix"] == got["bucket"]
-    with pytest.raises(ValueError):
-        DD.ngram_jaccard_pairs(docs, method="nope")
 
 
 def test_embedding_dedup_and_topk(spark):

@@ -273,15 +273,15 @@ def test_prefix_jaccard_fuzz_equals_bucket(spark, corpus):
     and single-gram docs included, thresholds incl. exact-integer t*|G|
     boundaries) the filtered plan equals the naive bucket plan exactly."""
     from legend_community_delta_spark.operators.dedup import (
-        ngram_jaccard_pairs)
+        _ngram_jaccard_bucket, ngram_jaccard_pairs)
     docs, thr = corpus
     df = spark.createDataFrame(docs, ["doc_id", "text"])
     out = {}
-    for method in ("prefix", "bucket"):
-        out[method] = {
-            (r["id_a"], r["id_b"]): round(r["jaccard"], 9)
-            for r in ngram_jaccard_pairs(df, n=2, threshold=thr,
-                                         method=method).collect()}
+    for method, pairs in (
+            ("prefix", ngram_jaccard_pairs(df, n=2, threshold=thr)),
+            ("bucket", _ngram_jaccard_bucket(df, "text", "doc_id", 2, thr))):
+        out[method] = {(r["id_a"], r["id_b"]): round(r["jaccard"], 9)
+                       for r in pairs.collect()}
     assert out["prefix"] == out["bucket"]
     # cross-corpus variant: parity split must equal the bucket self-join
     # restricted to (even, odd) memberships
