@@ -2762,6 +2762,14 @@ GROUP BY v.user_id, v.event_id
 """
 
 
+def _query_vec(emb: DataFrame) -> list[float]:
+    """The ``vec_id = 0`` embedding: the query of the ANN index entries."""
+    row = emb.where("vec_id = 0").first()
+    if row is None:
+        raise ValueError("no vec_id = 0 row in the embeddings to query with")
+    return [float(x) for x in row["embedding"]]
+
+
 def _q_ivf_index_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ANN through the PERSISTED IVF index: k-means cells partitioned on
     disk, query reads only the n_probe nearest cells (partition-pruned
@@ -2770,9 +2778,7 @@ def _q_ivf_index_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     path = tempfile.mkdtemp(prefix="legend_ivf_index_") + "/idx"
     emb = spark.table("embeddings")
     SIM.build_ivf_index(emb, path, n_centroids=8)
-    qv = [float(x) for x in
-          emb.where("vec_id = 0").first()["embedding"]]
-    return SIM.query_ivf_index(spark, path, qv, k=10, n_probe=3)
+    return SIM.query_ivf_index(spark, path, _query_vec(emb), k=10, n_probe=3)
 
 
 def _q_lsh_index_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2786,9 +2792,7 @@ def _q_lsh_index_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     path = tempfile.mkdtemp(prefix="legend_lsh_index_") + "/idx"
     emb = spark.table("embeddings")
     SIM.build_lsh_index(emb, path, dims=64, n_planes=8)
-    qv = [float(x) for x in
-          emb.where("vec_id = 0").first()["embedding"]]
-    return SIM.query_lsh_index(spark, path, qv, k=10)
+    return SIM.query_lsh_index(spark, path, _query_vec(emb), k=10)
 
 
 def _q_doc_surprisal(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3021,9 +3025,8 @@ def _q_pq_ann_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
                     lambda x: x.cast("double") / norm("embedding"))
         .alias("embedding"))
     cb = SIM.build_pq_index(unit, path, dims=64, m=16, n_codes=16, iters=1)
-    qv = [float(x) for x in unit.where("vec_id = 0").first()["embedding"]]
-    return SIM.pq_topk_refined(unit, spark.read.parquet(path), qv, cb,
-                               k=10, refine_factor=10)
+    return SIM.pq_topk_refined(unit, spark.read.parquet(path),
+                               _query_vec(unit), cb, k=10, refine_factor=10)
 
 
 def _q_surprisal_stream(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -9,6 +9,8 @@ on.
 
 from __future__ import annotations
 
+import random
+
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
@@ -62,3 +64,21 @@ def hyperplane_signature(vec: Column | str, planes: list[list[float]]) -> Column
     for b in bits[1:]:
         out = out + b
     return out.cast("long")
+
+
+def hyperplanes(dims: int, n_planes: int, seed: int) -> list[list[float]]:
+    """The seeded random hyperplanes of every LSH path — one draw, so an
+    index that records only ``(n_planes, seed, dims)`` redraws the same
+    planes at query time."""
+    rng = random.Random(seed)
+    return [[rng.gauss(0, 1) for _ in range(dims)] for _ in range(n_planes)]
+
+
+def signature_probes(vec: list[float], planes: list[list[float]],
+                     multiprobe: bool) -> list[int]:
+    """Driver-side twin of :func:`hyperplane_signature` for one vector,
+    followed by its 1-bit neighbours when *multiprobe*."""
+    sig = sum(1 << i for i, plane in enumerate(planes)
+              if sum(float(a) * b for a, b in zip(vec, plane)) >= 0)
+    return [sig] + ([sig ^ (1 << i) for i in range(len(planes))]
+                    if multiprobe else [])

@@ -27,7 +27,7 @@ from pyspark.sql import DataFrame, Window, functions as F
 from ..functions import (check_footer, read_footer, read_if_exists,
                          write_store)
 from ..functions.text import char_shingles, content_hash, word_ngrams
-from ..functions.vectors import cosine, hyperplane_signature
+from ..functions.vectors import cosine, hyperplane_signature, hyperplanes
 
 # Mersenne prime 2^31-1: keeps a*h+b < 2^62 so the permutation math never
 # overflows a long under ANSI mode (Spark 4 default); 2^31 hash space per
@@ -745,8 +745,7 @@ def embedding_dedup(df: DataFrame, vec_col: str = "embedding",
     """
     if dims is None:
         dims = len(df.select(vec_col).first()[0])
-    rng = random.Random(seed)
-    planes = [[rng.gauss(0, 1) for _ in range(dims)] for _ in range(n_planes)]
+    planes = hyperplanes(dims, n_planes, seed)
     sigs = (df.where(F.size(F.col(vec_col)) == dims)
             .select(F.col(id_col).alias("__id"), F.col(vec_col).alias("__v"),
                     hyperplane_signature(vec_col, planes).alias("__bucket")))

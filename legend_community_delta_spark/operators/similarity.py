@@ -1,23 +1,43 @@
 """Similarity search over embedding columns (``array<float>``).
 
-* :func:`cosine_topk` — brute-force top-k.  Spark plans order-by+limit as
-  ``TakeOrderedAndProject``: each partition keeps its own k, the driver
-  merges — no global sort, scales linearly with the table.
-* :func:`cosine_topk_many` — many queries at once: broadcast the (small)
-  query set, cross join, per-query window top-k.
-* :func:`lsh_topk` — the scale path: random-hyperplane bucket + multiprobe
-  (flip one bit), exact cosine within candidates only.
+Each shared decision has one home here: the cosine ranking tail
+(:func:`_score`, :func:`_topk`, :func:`_topk_per_query`), the LSH plane
+draw and probes (``functions.vectors.hyperplanes``/``signature_probes``),
+the k-means init and Lloyd update (:func:`_first_vectors`,
+:func:`_cell_means`), the PQ code choice (:func:`_nearest_code`) and cell
+ranking (:func:`_centroid_sims`, :func:`_nearest_cells`).  Centroid ties
+go to the LOWEST cell on every path, so an IVF query or kNN probe always
+reaches the cell its tied data was written to.
 """
 
 from __future__ import annotations
 
-import random
-
-from pyspark.sql import DataFrame, Window, functions as F
+from pyspark.sql import Column, DataFrame, Window, functions as F
 
 from ..functions import local_df, read_footer, write_store
 from ..functions.vectors import (cosine, dot, hyperplane_signature,
-                                 literal_vector)
+                                 hyperplanes, literal_vector,
+                                 signature_probes)
+
+
+def _score(vec: Column, query: Column) -> Column:
+    """Cosine as the ``cosine`` column, rounded to 6 places — the
+    rounding is what lets rows hash-match the DuckDB oracles."""
+    return F.round(cosine(vec, query), 6).alias("cosine")
+
+
+def _topk(scored: DataFrame, k: int, id_col: str) -> DataFrame:
+    """The *k* best ``cosine`` rows, ties broken on *id_col*."""
+    return scored.orderBy(F.desc("cosine"), F.col(id_col)).limit(k)
+
+
+def _topk_per_query(scored: DataFrame, k: int, id_col: str,
+                    query_id_col: str = "query_id") -> DataFrame:
+    """:func:`_topk` per query, with its 1-based ``rank``."""
+    w = Window.partitionBy(query_id_col).orderBy(F.desc("cosine"),
+                                                 F.col(id_col))
+    return (scored.withColumn("rank", F.row_number().over(w))
+            .where(F.col("rank") <= k))
 
 
 def cosine_topk(df: DataFrame, query_vec: list[float], k: int = 10,
@@ -26,11 +46,9 @@ def cosine_topk(df: DataFrame, query_vec: list[float], k: int = 10,
 
     Ties break on *id_col* so results are deterministic.
     """
-    q = literal_vector(query_vec)
-    return (df.select(F.col(id_col),
-                      F.round(cosine(F.col(vec_col), q), 6).alias("cosine"))
-            .orderBy(F.desc("cosine"), F.col(id_col))
-            .limit(k))
+    return _topk(df.select(F.col(id_col),
+                           _score(F.col(vec_col), literal_vector(query_vec))),
+                 k, id_col)
 
 
 def cosine_topk_df(df: DataFrame, query_df: DataFrame, k: int = 10,
@@ -44,12 +62,9 @@ def cosine_topk_df(df: DataFrame, query_df: DataFrame, k: int = 10,
     """
     qcol = query_vec_col or vec_col
     q = query_df.select(F.col(qcol).alias("__qv"))
-    return (df.crossJoin(F.broadcast(q))
-            .select(F.col(id_col),
-                    F.round(cosine(F.col(vec_col), F.col("__qv")), 6)
-                    .alias("cosine"))
-            .orderBy(F.desc("cosine"), F.col(id_col))
-            .limit(k))
+    return _topk(df.crossJoin(F.broadcast(q))
+                 .select(F.col(id_col), _score(F.col(vec_col), F.col("__qv"))),
+                 k, id_col)
 
 
 def cosine_topk_many(df: DataFrame, queries: DataFrame, k: int = 10,
@@ -61,13 +76,34 @@ def cosine_topk_many(df: DataFrame, queries: DataFrame, k: int = 10,
     The query side is broadcast (it is small by construction); ranking is a
     window partitioned by query — one shuffle keyed on query_id.
     """
-    joined = df.crossJoin(F.broadcast(queries))
-    scored = joined.select(
+    scored = df.crossJoin(F.broadcast(queries)).select(
         F.col(query_id_col), F.col(id_col),
-        F.round(cosine(F.col(vec_col), F.col(query_vec_col)), 6).alias("cosine"))
-    w = Window.partitionBy(query_id_col).orderBy(F.desc("cosine"), F.col(id_col))
-    return (scored.withColumn("rank", F.row_number().over(w))
-            .where(F.col("rank") <= k))
+        _score(F.col(vec_col), F.col(query_vec_col)))
+    return _topk_per_query(scored, k, id_col, query_id_col)
+
+
+def _first_vectors(df: DataFrame, n: int, vec_col: str,
+                   id_col: str) -> list[list[float]]:
+    """The first *n* vectors by id — the deterministic k-means init."""
+    rows = df.select(id_col, vec_col).orderBy(id_col).limit(n).collect()
+    if not rows:
+        raise ValueError(f"no vectors in [{vec_col}] to seed k-means from")
+    return [[float(x) for x in r[1]] for r in rows]
+
+
+def _cell_means(assigned: DataFrame,
+                keys: list[str]) -> dict[tuple, list[float]]:
+    """One Lloyd update: the mean of the ``__v`` vectors per *keys* cell.
+    Only non-empty cells appear, so an empty cell keeps its centroid."""
+    acc: dict[tuple, dict[int, float]] = {}
+    for r in (assigned.select(*keys, F.posexplode("__v")
+                              .alias("__pos", "__x"))
+              .groupBy(*keys, "__pos")
+              .agg(F.avg("__x").alias("__m"))
+              .collect()):
+        acc.setdefault(tuple(r[k] for k in keys), {})[r["__pos"]] = r["__m"]
+    return {key: [by_pos[p] for p in sorted(by_pos)]
+            for key, by_pos in acc.items()}
 
 
 def kmeans_centroids(df: DataFrame, n_centroids: int = 16, iters: int = 3,
@@ -82,27 +118,32 @@ def kmeans_centroids(df: DataFrame, n_centroids: int = 16, iters: int = 3,
     centroid (``dot(v, c/|c|) == cosine(v, c)`` — cosine is
     scale-invariant in c), cutting assignment cost ~3x per iteration
     without changing any argmax."""
-    init = (df.select(id_col, vec_col).orderBy(id_col)
-            .limit(n_centroids).collect())
-    centroids = [[float(x) for x in r[1]] for r in init]
+    centroids = _first_vectors(df, n_centroids, vec_col, id_col)
     for _ in range(iters):
         # assignment switches to the Arrow-vectorized matmul path past
-        # 64 cells (see _assign_cells) — each Lloyd pass is O(n*k*d)
+        # 16 cells (see _assign_cells) — each Lloyd pass is O(n*k*d)
         assigned = _assign_cells(
             df.select(id_col, vec_col), centroids, vec_col, id_col,
             assume_normalized).select(
             F.col(vec_col).alias("__v"), F.col("__cell"))
-        means = (assigned
-                 .select("__cell", F.posexplode("__v").alias("__pos", "__x"))
-                 .groupBy("__cell", "__pos")
-                 .agg(F.avg("__x").alias("__m"))
-                 .collect())
-        by_cell: dict[int, dict[int, float]] = {}
-        for r in means:
-            by_cell.setdefault(r["__cell"], {})[r["__pos"]] = r["__m"]
-        for cell, dims in by_cell.items():
-            centroids[cell] = [dims[i] for i in sorted(dims)]
+        for (cell,), mean in _cell_means(assigned, ["__cell"]).items():
+            centroids[cell] = mean
     return centroids
+
+
+def _nearest_cells(query_vec: list[float], centroids: list[list[float]],
+                   n_probe: int) -> list[int]:
+    """The *n_probe* cells whose centroid is most cosine-similar to the
+    driver-side query.  The sort is stable, so ties keep the lowest cell
+    first — the rule of :func:`_centroid_sims`."""
+    def _cos(c: list[float]) -> float:
+        dot_ = sum(x * y for x, y in zip(query_vec, c))
+        na = sum(x * x for x in query_vec) ** 0.5
+        nb = sum(x * x for x in c) ** 0.5
+        return dot_ / (na * nb) if na > 0 and nb > 0 else 0.0
+
+    return sorted(range(len(centroids)),
+                  key=lambda i: -_cos(centroids[i]))[:n_probe]
 
 
 def ivf_topk(df: DataFrame, query_vec: list[float], k: int = 10,
@@ -118,31 +159,12 @@ def ivf_topk(df: DataFrame, query_vec: list[float], k: int = 10,
     assignment (bucketed by cell id) so each query scans
     ~n_probe/n_centroids of the table.
     """
-    if refine_iters > 0:
-        centroids = kmeans_centroids(df, n_centroids, refine_iters,
-                                     vec_col, id_col)
-    else:
-        centroid_rows = (df.select(id_col, vec_col).orderBy(id_col)
-                         .limit(n_centroids).collect())
-        centroids = [[float(x) for x in r[1]] for r in centroid_rows]
-
-    def _cos(a: list[float], b: list[float]) -> float:
-        dot_ = sum(x * y for x, y in zip(a, b))
-        na = sum(x * x for x in a) ** 0.5
-        nb = sum(x * x for x in b) ** 0.5
-        return dot_ / (na * nb) if na > 0 and nb > 0 else 0.0
-
-    probe_cells = sorted(range(len(centroids)),
-                         key=lambda i: -_cos(query_vec, centroids[i]))[:n_probe]
-
-    # cell assignment as one Column: argmax over centroid similarities
-    sims = F.array(*[
-        F.struct(cosine(F.col(vec_col), literal_vector(c)).alias("sim"),
-                 F.lit(i).alias("cell"))
-        for i, c in enumerate(centroids)])
-    cell = F.array_max(sims)["cell"]
-    candidates = df.withColumn("__cell", cell).where(
-        F.col("__cell").isin([int(c) for c in probe_cells]))
+    centroids = (kmeans_centroids(df, n_centroids, refine_iters, vec_col,
+                                  id_col) if refine_iters > 0 else
+                 _first_vectors(df, n_centroids, vec_col, id_col))
+    candidates = df.withColumn(
+        "__cell", _cell_col(centroids, vec_col)["cell"]).where(
+        F.col("__cell").isin(_nearest_cells(query_vec, centroids, n_probe)))
     return cosine_topk(candidates, query_vec, k, vec_col, id_col)
 
 
@@ -156,21 +178,9 @@ def lsh_topk(df: DataFrame, query_vec: list[float], k: int = 10,
     At scale: persist the signature column (or bucket-partition the table)
     once, then every query scans ~1/2^n_planes of the data.
     """
-    dims = len(query_vec)
-    rng = random.Random(seed)
-    planes = [[rng.gauss(0, 1) for _ in range(dims)] for _ in range(n_planes)]
-
-    # driver-side signature of the query vector (same math as the column)
-    qsig = 0
-    for i, plane in enumerate(planes):
-        proj = sum(float(a) * b for a, b in zip(query_vec, plane))
-        if proj >= 0:
-            qsig |= 1 << i
-    probes = [qsig] + ([qsig ^ (1 << i) for i in range(n_planes)]
-                       if multiprobe else [])
-
-    sig = hyperplane_signature(vec_col, planes)
-    candidates = df.where(sig.isin(probes))
+    planes = hyperplanes(len(query_vec), n_planes, seed)
+    candidates = df.where(hyperplane_signature(vec_col, planes).isin(
+        signature_probes(query_vec, planes, multiprobe)))
     return cosine_topk(candidates, query_vec, k, vec_col, id_col)
 
 
@@ -185,9 +195,7 @@ def build_lsh_index(df: DataFrame, path: str, dims: int,
     of the data per multiprobe query instead of a full scan.  Rebuild to
     change n_planes/seed (both are recorded in the index footer).
     """
-    rng = random.Random(seed)
-    planes = [[rng.gauss(0, 1) for _ in range(dims)]
-              for _ in range(n_planes)]
+    planes = hyperplanes(dims, n_planes, seed)
     write_store(df.withColumn("__sig", hyperplane_signature(vec_col, planes)),
                 path, [(int(n_planes), int(seed), int(dims))],
                 "n_planes int, seed int, dims int", partition_by="__sig")
@@ -207,15 +215,8 @@ def query_lsh_index(spark, path: str, query_vec: list[float], k: int = 10,
     n_planes, seed, dims = read_footer(spark, path)[0]
     if len(query_vec) != dims:
         raise ValueError(f"query dims {len(query_vec)} != index dims {dims}")
-    rng = random.Random(seed)
-    planes = [[rng.gauss(0, 1) for _ in range(dims)]
-              for _ in range(n_planes)]
-    qsig = 0
-    for i, plane in enumerate(planes):
-        if sum(float(a) * b for a, b in zip(query_vec, plane)) >= 0:
-            qsig |= 1 << i
-    probes = [qsig] + ([qsig ^ (1 << i) for i in range(n_planes)]
-                       if multiprobe else [])
+    probes = signature_probes(query_vec, hyperplanes(dims, n_planes, seed),
+                              multiprobe)
     indexed = spark.read.parquet(path).where(F.col("__sig").isin(probes))
     return cosine_topk(indexed, query_vec, k, vec_col, id_col)
 
@@ -233,12 +234,8 @@ def build_ivf_index(df: DataFrame, path: str, n_centroids: int = 16,
     """
     centroids = kmeans_centroids(df, n_centroids, refine_iters,
                                  vec_col, id_col)
-    sims = F.array(*[
-        F.struct(cosine(F.col(vec_col), literal_vector(c)).alias("sim"),
-                 F.lit(i).alias("cell"))
-        for i, c in enumerate(centroids)])
-    write_store(df.withColumn("__cell", F.array_max(sims)["cell"]), path,
-                [(i, [float(x) for x in c]) for i, c in enumerate(centroids)],
+    write_store(df.withColumn("__cell", _cell_col(centroids, vec_col)["cell"]),
+                path, list(enumerate(centroids)),
                 "cell int, centroid array<double>", partition_by="__cell")
     return centroids
 
@@ -249,17 +246,11 @@ def query_ivf_index(spark, path: str, query_vec: list[float], k: int = 10,
     """Top-k against a :func:`build_ivf_index` index: rank the stored
     centroids driver-side, read only the *n_probe* nearest cells
     (partition-pruned IN-list), exact cosine inside."""
-    centroids = {r["cell"]: list(r["centroid"])
-                 for r in read_footer(spark, path)}
-
-    def _cos(a, b):
-        dot_ = sum(x * y for x, y in zip(a, b))
-        na = sum(x * x for x in a) ** 0.5
-        nb = sum(x * x for x in b) ** 0.5
-        return dot_ / (na * nb) if na > 0 and nb > 0 else 0.0
-
-    probe = sorted(centroids,
-                   key=lambda c: -_cos(query_vec, centroids[c]))[:n_probe]
+    # the footer holds cells 0..n-1 in no fixed order; sorting by cell
+    # makes a list index the cell, so ties pick the lowest one
+    centroids = [list(r["centroid"]) for r in
+                 sorted(read_footer(spark, path), key=lambda r: r["cell"])]
+    probe = _nearest_cells(query_vec, centroids, n_probe)
     indexed = spark.read.parquet(path).where(F.col("__cell").isin(probe))
     return cosine_topk(indexed, query_vec, k, vec_col, id_col)
 
@@ -291,9 +282,8 @@ def lsh_topk_df(df: DataFrame, query_df: DataFrame, dims: int, k: int = 10,
     no candidates (loudly empty) instead of silently degraded
     signatures over truncated vectors.
     """
-    rng = random.Random(seed)
-    tables = [[[rng.gauss(0, 1) for _ in range(dims)]
-               for _ in range(n_planes)] for _ in range(n_tables)]
+    flat = hyperplanes(dims, n_planes * n_tables, seed)
+    tables = [flat[t * n_planes:(t + 1) * n_planes] for t in range(n_tables)]
     qcol = query_vec_col or vec_col
     q = query_df.where(F.size(F.col(qcol)) == dims).select(
         F.col(qcol).alias("__qv"),
@@ -307,11 +297,9 @@ def lsh_topk_df(df: DataFrame, query_df: DataFrame, dims: int, k: int = 10,
         hit_any = hit if hit_any is None else (hit_any | hit)
     cand = df.where(F.size(F.col(vec_col)) == dims).join(
         F.broadcast(q), hit_any)
-    return (cand.select(F.col(id_col),
-                        F.round(cosine(F.col(vec_col), F.col("__qv")), 6)
-                        .alias("cosine"))
-            .orderBy(F.desc("cosine"), F.col(id_col))
-            .limit(k))
+    return _topk(cand.select(F.col(id_col),
+                             _score(F.col(vec_col), F.col("__qv"))),
+                 k, id_col)
 
 
 def ann_recall(df: DataFrame, queries: DataFrame, approx_fn, k: int = 10,
@@ -359,13 +347,15 @@ def ann_recall(df: DataFrame, queries: DataFrame, approx_fn, k: int = 10,
                     f"{query_id_col} long, hits int, recall double")
 
 
-def _l2sq_col(a, b) -> F.Column:
-    """Squared L2 distance between two array columns — same
-    left-to-right deterministic summation as :func:`..functions.vectors.dot`."""
-    return F.aggregate(
-        F.zip_with(a, b, lambda x, y: (x.cast("double") - y.cast("double"))
+def _nearest_code(cents: Column, v: Column) -> Column:
+    """Index of the L2-nearest centroid in the array *cents* (the first
+    on ties) — training and encoding must pick codes the same way.  The
+    squared distance sums left to right, like ``vectors.dot``."""
+    dists = F.transform(cents, lambda c: F.aggregate(
+        F.zip_with(c, v, lambda x, y: (x.cast("double") - y.cast("double"))
                    * (x.cast("double") - y.cast("double"))),
-        F.lit(0.0), lambda acc, v: acc + v)
+        F.lit(0.0), lambda acc, s: acc + s))
+    return (F.array_position(dists, F.array_min(dists)) - 1).cast("int")
 
 
 def pq_train(df: DataFrame, dims: int, m: int = 8, n_codes: int = 16,
@@ -394,37 +384,24 @@ def pq_train(df: DataFrame, dims: int, m: int = 8, n_codes: int = 16,
         raise ValueError(f"dims [{dims}] must divide into m [{m}] subspaces")
     d = dims // m
     base = df.where(F.size(F.col(vec_col)) == dims)
-    init = base.select(id_col, vec_col).orderBy(id_col).limit(n_codes).collect()
+    init = _first_vectors(base, n_codes, vec_col, id_col)
     if len(init) < n_codes:
         raise ValueError(
             f"need >= n_codes [{n_codes}] vectors of dims [{dims}]; "
             f"found {len(init)}")
-    codebooks = [[[float(x) for x in r[1][j * d:(j + 1) * d]] for r in init]
-                 for j in range(m)]
+    codebooks = [[v[j * d:(j + 1) * d] for v in init] for j in range(m)]
     for _ in range(iters):
-        cb = F.array(*[
-            F.array(*[F.array(*[F.lit(float(x)) for x in code])
-                      for code in codes_j])
-            for codes_j in codebooks])
+        cb = F.array(*[F.array(*[literal_vector(code) for code in codes_j])
+                       for codes_j in codebooks])
         subs = base.select(
             F.posexplode(F.array(*[F.slice(F.col(vec_col), j * d + 1, d)
                                    for j in range(m)]))
             .alias("__sub", "__v"))
-        cents = F.element_at(cb, F.col("__sub") + 1)
-        dists = F.transform(cents, lambda c: _l2sq_col(c, F.col("__v")))
-        code = (F.array_position(dists, F.array_min(dists)) - 1).cast("int")
-        means = (subs.withColumn("__code", code)
-                 .select("__sub", "__code",
-                         F.posexplode("__v").alias("__pos", "__x"))
-                 .groupBy("__sub", "__code", "__pos")
-                 .agg(F.avg("__x").alias("__mean"))
-                 .collect())
-        acc: dict[tuple[int, int], dict[int, float]] = {}
-        for r in means:
-            acc.setdefault((r["__sub"], r["__code"]), {})[r["__pos"]] = \
-                r["__mean"]
-        for (j, c), by_pos in acc.items():
-            codebooks[j][c] = [by_pos[p] for p in sorted(by_pos)]
+        code = _nearest_code(F.element_at(cb, F.col("__sub") + 1),
+                             F.col("__v"))
+        for (j, c), mean in _cell_means(subs.withColumn("__code", code),
+                                        ["__sub", "__code"]).items():
+            codebooks[j][c] = mean
     return codebooks
 
 
@@ -440,14 +417,10 @@ def pq_encode(df: DataFrame, codebooks: list[list[list[float]]],
     m = len(codebooks)
     d = len(codebooks[0][0])
     dims = m * d
-    codes = []
-    for j in range(m):
-        sl = F.slice(F.col(vec_col), j * d + 1, d)
-        cents = F.array(*[F.array(*[F.lit(float(x)) for x in code])
-                          for code in codebooks[j]])
-        dists = F.transform(cents, lambda c: _l2sq_col(c, sl))
-        codes.append((F.array_position(dists, F.array_min(dists)) - 1)
-                     .cast("int"))
+    codes = [_nearest_code(F.array(*[literal_vector(code)
+                                     for code in codebooks[j]]),
+                           F.slice(F.col(vec_col), j * d + 1, d))
+             for j in range(m)]
     return (df.where(F.size(F.col(vec_col)) == dims)
             .select(F.col(id_col), F.array(*codes).alias("codes")))
 
@@ -553,29 +526,32 @@ def _unit(v: list[float]) -> list[float]:
     return [x / n for x in v] if n > 0 else list(v)
 
 
+def _centroid_sims(centroids: list[list[float]], vec_col: str,
+                   assume_normalized: bool = False) -> Column:
+    """``array<struct<sim, negcell>>``: the similarity of *vec_col* to
+    each (literal) centroid.  When the input vectors are unit-normalized,
+    ``dot(v, c/|c|) == cosine(v, c)`` exactly, so *assume_normalized*
+    swaps each per-centroid cosine (dot + two norms) for one dot against
+    the driver-normalized centroid — 3x fewer interpreted lambda
+    evaluations in the scan."""
+    # struct comparison is lexicographic, so storing -cell makes the
+    # greatest struct break similarity TIES toward the LOWEST cell index
+    # — matching numpy argmax in the vectorized path and the stable sort
+    # of _nearest_cells (ties are real for all-zero vectors or duplicate
+    # centroids)
+    def sim(c: list[float]) -> Column:
+        if assume_normalized:
+            return dot(F.col(vec_col), literal_vector(_unit(c)))
+        return cosine(F.col(vec_col), literal_vector(c))
+    return F.array(*[F.struct(sim(c).alias("sim"), F.lit(-i).alias("negcell"))
+                     for i, c in enumerate(centroids)])
+
+
 def _cell_col(centroids: list[list[float]], vec_col: str,
-              assume_normalized: bool = False) -> F.Column:
+              assume_normalized: bool = False) -> Column:
     """argmax-cosine cell assignment plus the winning similarity —
-    centroids are literals, so assignment is a narrow map.  When the
-    input vectors are unit-normalized, ``dot(v, c/|c|) == cosine(v, c)``
-    exactly, so *assume_normalized* swaps each per-centroid cosine
-    (dot + two norms) for one dot against the driver-normalized
-    centroid — 3x fewer interpreted lambda evaluations in the scan."""
-    # struct comparison is lexicographic, so storing -cell makes
-    # array_max break similarity TIES toward the LOWEST cell index —
-    # matching numpy argmax in the vectorized path (ties are real for
-    # all-zero vectors or duplicate centroids)
-    if assume_normalized:
-        sims = F.array(*[
-            F.struct(dot(F.col(vec_col), literal_vector(_unit(c)))
-                     .alias("sim"), F.lit(-i).alias("negcell"))
-            for i, c in enumerate(centroids)])
-    else:
-        sims = F.array(*[
-            F.struct(cosine(F.col(vec_col), literal_vector(c)).alias("sim"),
-                     F.lit(-i).alias("negcell"))
-            for i, c in enumerate(centroids)])
-    best = F.array_max(sims)
+    centroids are literals, so assignment is a narrow map."""
+    best = F.array_max(_centroid_sims(centroids, vec_col, assume_normalized))
     return F.struct((-best["negcell"]).alias("cell"),
                     best["sim"].alias("csim"))
 
@@ -800,12 +776,8 @@ def hard_negatives(df: DataFrame, queries: DataFrame, k: int = 10,
               .where(F.col(label_col) != F.col(query_label_col)))
     scored = joined.select(
         F.col(query_id_col), F.col(id_col), F.col(label_col),
-        F.round(cosine(F.col(vec_col), F.col(query_vec_col)), 6)
-        .alias("cosine"))
-    w = Window.partitionBy(query_id_col).orderBy(
-        F.desc("cosine"), F.col(id_col))
-    return (scored.withColumn("rank", F.row_number().over(w))
-            .where(F.col("rank") <= k))
+        _score(F.col(vec_col), F.col(query_vec_col)))
+    return _topk_per_query(scored, k, id_col, query_id_col)
 
 
 def knn_graph(df: DataFrame, k: int = 10, vec_col: str = "embedding",
@@ -824,13 +796,9 @@ def knn_graph(df: DataFrame, k: int = 10, vec_col: str = "embedding",
         F.col(id_col).alias("query_id"), F.col(vec_col).alias("__qv"))
     joined = (df.crossJoin(F.broadcast(q))
               .where(F.col(id_col) != F.col("query_id")))
-    scored = joined.select(
-        "query_id", F.col(id_col),
-        F.round(cosine(F.col(vec_col), F.col("__qv")), 6).alias("cosine"))
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("cosine"), F.col(id_col))
-    return (scored.withColumn("rank", F.row_number().over(w))
-            .where(F.col("rank") <= k))
+    return _topk_per_query(
+        joined.select("query_id", F.col(id_col),
+                      _score(F.col(vec_col), F.col("__qv"))), k, id_col)
 
 
 def knn_graph_cells(df: DataFrame, k: int = 10,
@@ -856,29 +824,17 @@ def knn_graph_cells(df: DataFrame, k: int = 10,
         F.col(id_col), F.col(vec_col),
         _cell_col(centroids, vec_col, assume_normalized)["cell"]
         .alias("__cell"))
-    sims = F.array(*[
-        F.struct(
-            (cosine(F.col(vec_col), F.array(*[F.lit(float(x)) for x in c]))
-             if not assume_normalized else
-             dot(F.col(vec_col),
-                 F.array(*[F.lit(float(x)) for x in _unit(c)])))
-            .alias("csim"),
-            F.lit(i).alias("cell"))
-        for i, c in enumerate(centroids)])
-    probes = F.slice(F.reverse(F.array_sort(sims)), 1, n_probe)
+    probes = F.slice(F.reverse(F.array_sort(
+        _centroid_sims(centroids, vec_col, assume_normalized))), 1, n_probe)
     q = df.select(
         F.col(id_col).alias("query_id"), F.col(vec_col).alias("__qv"),
-        F.explode(F.transform(probes, lambda p: p["cell"]))
+        F.explode(F.transform(probes, lambda p: -p["negcell"]))
         .alias("__cell"))
     joined = (data.join(q, "__cell")
               .where(F.col(id_col) != F.col("query_id")))
-    scored = joined.select(
-        "query_id", F.col(id_col),
-        F.round(cosine(F.col(vec_col), F.col("__qv")), 6).alias("cosine"))
     # a (query, vector) pair can meet in several probed cells; dedup
     # before ranking so rank positions stay unique
-    scored = scored.dropDuplicates(["query_id", id_col])
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("cosine"), F.col(id_col))
-    return (scored.withColumn("rank", F.row_number().over(w))
-            .where(F.col("rank") <= k))
+    scored = joined.select(
+        "query_id", F.col(id_col), _score(F.col(vec_col), F.col("__qv"))
+    ).dropDuplicates(["query_id", id_col])
+    return _topk_per_query(scored, k, id_col)

@@ -7,6 +7,8 @@ import math
 import pytest
 from pyspark.sql import functions as F
 
+from legend_community_delta_spark.demo import _query_vec
+from legend_community_delta_spark.operators import similarity as SIM
 from legend_community_delta_spark.operators.similarity import (
     semdedup,
     semdedup_pairs,
@@ -195,3 +197,53 @@ def test_assign_cells_tie_break_identical_across_paths(spark):
         assert lit == vec, (norm, lit, vec)
         assert lit[0] == 0          # all-zero -> lowest index wins
         assert lit[1] == 1          # duplicate centroid -> index 1, not 3
+
+
+def test_centroid_ties_probe_the_cell_the_data_was_written_to(spark,
+                                                              tmp_path):
+    """Rows 0, 1 and 4 are identical and seed two identical centroids, so
+    every cell choice for them is a tie.  IVF assignment, IVF probing and
+    the kNN probes must all break it toward the lowest cell, or a query
+    probes a cell its duplicates were never written to."""
+    df = spark.createDataFrame(
+        [(0, [1.0, 0.0]), (1, [1.0, 0.0]), (2, [0.0, 1.0]),
+         (3, [0.0, 1.0]), (4, [1.0, 0.0]), (5, [0.2, 0.8])],
+        "vec_id long, embedding array<double>")
+    q = [1.0, 0.0]
+
+    def rows(out):
+        return sorted(tuple(r) for r in out.collect())
+
+    brute = rows(SIM.cosine_topk(df, q, k=3))
+    assert [r[0] for r in brute] == [0, 1, 4]
+    assert rows(SIM.ivf_topk(df, q, k=3, n_centroids=3, n_probe=1)) == brute
+    path = str(tmp_path / "ivf")
+    cents = SIM.build_ivf_index(df, path, n_centroids=3)
+    assert rows(SIM.query_ivf_index(spark, path, q, k=3, n_probe=1)) == brute
+    def cells(out):
+        return {r["vec_id"]: r["__cell"] for r in out.collect()}
+
+    assert cells(spark.read.parquet(path)) == cells(
+        SIM._assign_cells(df, cents, "embedding", "vec_id"))
+
+    def edges(g):
+        return sorted((r["query_id"], r["vec_id"]) for r in g.collect())
+
+    assert edges(SIM.knn_graph_cells(df, k=1, n_cells=3, n_probe=1)) == \
+        edges(SIM.knn_graph(df, k=1))
+
+
+@pytest.mark.parametrize("call", [
+    lambda e, p: SIM.kmeans_centroids(e),
+    lambda e, p: SIM.ivf_topk(e, [1.0, 0.0]),
+    lambda e, p: SIM.build_ivf_index(e, p),
+    lambda e, p: SIM.semdedup_pairs(e),
+    lambda e, p: SIM.knn_graph_cells(e),
+    lambda e, p: SIM.semantic_contamination(e, e),
+    lambda e, p: _query_vec(e),
+], ids=["kmeans_centroids", "ivf_topk", "build_ivf_index", "semdedup_pairs",
+        "knn_graph_cells", "semantic_contamination", "demo._query_vec"])
+def test_empty_vectors_raise_a_pointed_error(spark, tmp_path, call):
+    empty = spark.createDataFrame([], "vec_id long, embedding array<double>")
+    with pytest.raises(ValueError, match=r"embedding|vec_id = 0"):
+        call(empty, str(tmp_path / "idx"))

@@ -55,3 +55,17 @@ def test_text_overlap_kernels_have_one_home():
               for p in sorted(_PKG.rglob("*.py"))
               for name in _calls(p, _is_cover)]
     assert covers == [("operators/spans.py", "_cleaned")]
+
+
+def test_vector_search_kernels_have_one_home():
+    """The seeded LSH plane draw lives only in ``vectors.hyperplanes``
+    (the demo oracle keeps its own draw as an independent reference) and
+    the centroid argmax only in ``similarity._cell_col``."""
+    draws = [(p.relative_to(_PKG).as_posix(), name)
+             for p in sorted(_PKG.rglob("*.py"))
+             for name in _calls(p, lambda c: _fn(c) == "gauss")]
+    assert draws == [("demo.py", "_embedding_dedup_oracle"),
+                     ("functions/vectors.py", "hyperplanes")]
+    similarity = _PKG / "operators" / "similarity.py"
+    assert _calls(similarity, lambda c: _fn(c) == "array_max") == [
+        "_cell_col"]

@@ -7,7 +7,8 @@ run on the judge's machine).  This tool is the complement: run
 ``tests/test_properties.py`` N times with ``HYPOTHESIS_EXPLORE=1`` (the
 conftest hatch that skips loading the derandomized profile), a fresh
 random seed per repetition, so each rep explores a different slice of
-the input space.
+the input space.  Each rep prints its seed, and a failing rep's saved
+log starts with the command that reruns it from that seed.
 
 Any falsifying example hypothesis prints should be pinned as a new
 ``@example(...)`` in tests/test_properties.py (as the round-6 bug was at
@@ -32,20 +33,22 @@ def main(reps: int) -> int:
     failures = 0
     for rep in range(1, reps + 1):
         t0 = time.time()
+        seed = rep * 7919 + int(t0) % 100003
         proc = subprocess.run(
             [sys.executable, "-m", "pytest", "tests/test_properties.py",
-             "-q", "-p", "no:cacheprovider",
-             f"--hypothesis-seed={rep * 7919 + int(time.time()) % 100003}"],
+             "-q", "-p", "no:cacheprovider", f"--hypothesis-seed={seed}"],
             cwd=REPO, env=env, capture_output=True, text=True)
         tail = "\n".join(proc.stdout.strip().splitlines()[-3:])
         status = "green" if proc.returncode == 0 else "FAIL"
-        print(f"rep {rep}/{reps}: {status} in {time.time() - t0:.0f}s\n"
-              f"{tail}\n", flush=True)
+        print(f"rep {rep}/{reps} seed={seed}: {status} in "
+              f"{time.time() - t0:.0f}s\n{tail}\n", flush=True)
         if proc.returncode != 0:
             failures += 1
             out = os.path.join(REPO, f".hypothesis_sweep_rep{rep}.log")
             with open(out, "w") as f:
-                f.write(proc.stdout + "\n--- stderr ---\n" + proc.stderr)
+                f.write(f"rerun: HYPOTHESIS_EXPLORE=1 python -m pytest "
+                        f"tests/test_properties.py --hypothesis-seed={seed}"
+                        f"\n\n{proc.stdout}\n--- stderr ---\n{proc.stderr}")
             print(f"  falsifying output saved to {out} — pin the example "
                   f"in tests/test_properties.py", flush=True)
     return 1 if failures else 0
