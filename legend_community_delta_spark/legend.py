@@ -90,7 +90,7 @@ class Legend:
         """Mapping or service path -> one Spark SQL SELECT string."""
         if path in self.model.mappings:
             mapping = self.model.get_mapping(path)
-            return mapping_sql(self.model, mapping, {})
+            return mapping_sql(self.model, mapping)
         if path in self.model.services:
             service = self.model.get_service(path)
             mapping = self.model.get_mapping(service.mapping_path)

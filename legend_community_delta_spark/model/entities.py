@@ -214,10 +214,6 @@ class Table:
     columns: list[Column] = field(default_factory=list)
     primary_key: list[str] = field(default_factory=list)
 
-    @property
-    def qualified_name(self) -> str:
-        return f"{self.schema}.{self.name}" if self.schema else self.name
-
 
 @dataclass
 class Database:

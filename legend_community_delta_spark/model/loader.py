@@ -105,32 +105,22 @@ class LegendModel:
                 out.append(it)
         return out
 
-    def all_properties(self, cls: PureClass) -> list:
-        props: list = []
+    def _inherited(self, cls: PureClass, attr: str) -> list:
+        items: list = []
         for st in cls.super_types:
-            if st in ("meta::pure::metamodel::type::Any", "Any"):
-                continue
-            props.extend(self.all_properties(self.get_class(st)))
-        props.extend(cls.properties)
-        return self._merge_by_name(props)
+            if st not in ("meta::pure::metamodel::type::Any", "Any"):
+                items.extend(self._inherited(self.get_class(st), attr))
+        items.extend(getattr(cls, attr))
+        return self._merge_by_name(items)
+
+    def all_properties(self, cls: PureClass) -> list:
+        return self._inherited(cls, "properties")
 
     def all_constraints(self, cls: PureClass) -> list:
-        out: list = []
-        for st in cls.super_types:
-            if st in ("meta::pure::metamodel::type::Any", "Any"):
-                continue
-            out.extend(self.all_constraints(self.get_class(st)))
-        out.extend(cls.constraints)
-        return self._merge_by_name(out)
+        return self._inherited(cls, "constraints")
 
     def all_qualified_properties(self, cls: PureClass) -> list:
-        out: list = []
-        for st in cls.super_types:
-            if st in ("meta::pure::metamodel::type::Any", "Any"):
-                continue
-            out.extend(self.all_qualified_properties(self.get_class(st)))
-        out.extend(cls.qualified_properties)
-        return self._merge_by_name(out)
+        return self._inherited(cls, "qualified_properties")
 
 
 def load_resources(directory: str) -> LegendModel:

@@ -72,9 +72,6 @@ class Context:
     guard_nullable: bool = False         # constraint mode: null-guard comparisons
     _qp_stack: tuple[str, ...] = ()      # cycle guard for qualified properties
 
-    def with_style(self, style: SqlStyle) -> "Context":
-        return replace(self, style=style)
-
     # -- property resolution ------------------------------------------------
 
     def resolve_property(self, name: str):
@@ -411,11 +408,13 @@ def _func_sql(node: Node, ctx: Context) -> str:
 
     # ---- aggregates (used from groupBy agg lambdas) ----------------------------
     if name == "average":
-        # golden pins int->double promotion decoration (LegendEntityTest:235)
-        inner = p(0)
+        # int->double promotion (reference golden `avg(1.0 * col)`,
+        # LegendEntityTest:235).  Spark types the literal 1.0 as
+        # DECIMAL(2,1), not DOUBLE as the reference's Databricks dialect
+        # does, so the cast keeps the average double-typed.
         if _is_numeric_int(params[0], ctx):
-            inner = f"1.0 * {inner}"
-        return f"avg({inner})"
+            return f"avg(cast(1.0 * {p(0)} as double))"
+        return f"avg({p(0)})"
     if name in ("count", "sum", "min", "max"):
         return f"{name}({p(0)})"
     if name in ("stdDevPopulation",):

@@ -20,20 +20,31 @@ Golden shapes (``LegendEntityTest.scala:201-244``)::
     `root` where not `root`.gender is null group by `Gender` order by
     `HighFives` desc limit 10
 
-Deviation from the reference (documented): select-list and WHERE-conjunct
+The mapping query's WHERE clause is the class's DQ rule set
+(``expectations.class_expectations``, nested-class rules included) rendered
+in query style, keeping each rule whose PURE text names a data property
+at a word boundary.  Expressions and aggregates render through
+``compiler.to_sql``.
+
+Deviations from the reference (documented): select-list and WHERE-conjunct
 *order* follows model declaration order, not Scala ``Map`` hash order —
-semantics are identical, ours is deterministic.
+semantics are identical, ours is deterministic.  ``average`` renders as
+``avg(cast(1.0 * col as double))``: Spark types the literal 1.0 as
+DECIMAL(2,1) where the reference's Databricks dialect types it DOUBLE, so
+the cast keeps the double-typed average.
 """
 
 from __future__ import annotations
 
+import re
 from dataclasses import dataclass, field as dc_field
 from typing import Any
 
+from ..expectations import class_expectations
 from ..model.entities import LegendModelError, Mapping, PureClass, Service
 from ..model.loader import LegendModel
 from . import ast as A
-from .compiler import QUERY_STYLE, Context, infer_type, to_pure, to_sql
+from .compiler import QUERY_STYLE, Context, to_sql
 
 Node = dict[str, Any]
 
@@ -120,32 +131,23 @@ def _compile_lambda_body(lam: Node, ctx: Context) -> str:
     return to_sql(body, ctx)
 
 
+_AGGREGATES = {"average", "count", "sum", "min", "max", "stdDevPopulation",
+               "stdDevSample", "distinct"}
+
+
 def _agg_sql(map_lambda: Node, agg_lambda: Node, ctx: Context) -> str:
     """Compile agg(x|$x.col, x|$x->fn()) by substituting the mapped column
-    expression into the aggregation function."""
-    inner_sql = _compile_lambda_body(map_lambda, ctx)
+    expression into the aggregation function, rendered by the compiler."""
+    map_body = A.lambda_body(map_lambda) if A.is_lambda(map_lambda) else map_lambda
     agg_body = A.lambda_body(agg_lambda) if A.is_lambda(agg_lambda) else agg_lambda
     if not A.is_func(agg_body):
         raise LegendModelError("aggregation lambda must be a function call")
     fn = A.func_name(agg_body)
-    if fn == "average":
-        # int->double promotion (reference golden: `avg(1.0 * col)`,
-        # LegendEntityTest:235).  Deviation: we wrap in cast(... as double)
-        # because Spark types the literal 1.0 as DECIMAL(2,1) whereas the
-        # reference's Databricks dialect types it DOUBLE — the cast keeps
-        # the *semantic* contract (double-typed average) on Spark.
-        map_body = A.lambda_body(map_lambda) if A.is_lambda(map_lambda) else map_lambda
-        if infer_type(map_body, ctx) in ("Integer", "Byte", "Short", "Number"):
-            return f"avg(cast(1.0 * {inner_sql} as double))"
-        return f"avg({inner_sql})"
-    table = {"count": "count", "sum": "sum", "min": "min", "max": "max",
-             "stdDevPopulation": "stddev_pop", "stdDevSample": "stddev_samp",
-             "distinct": "count(distinct %s)"}
+    if fn not in _AGGREGATES:
+        raise LegendModelError(f"unsupported aggregate [{fn}]")
     if fn == "distinct":
-        return f"count(distinct {inner_sql})"
-    if fn in table:
-        return f"{table[fn]}({inner_sql})"
-    raise LegendModelError(f"unsupported aggregate [{fn}]")
+        return f"count(distinct {to_sql(map_body, ctx)})"
+    return to_sql({**agg_body, "parameters": [map_body]}, ctx)
 
 
 def service_sql(model: LegendModel, service: Service, table: str,
@@ -201,65 +203,32 @@ def _entity_select(ctx: Context) -> list[str]:
     return items
 
 
-def mapping_sql(model: LegendModel, mapping: Mapping,
-                expectations: dict[str, str]) -> str:
+def mapping_sql(model: LegendModel, mapping: Mapping) -> str:
     """Synthesize the flagship mapping query (``Legend.scala:110-139``):
     select every mapped field (renamed back to entity property names) plus
     every derivation, pre-filtered by every expectation that mentions a
-    mapped field (the reference's substring-applicability test,
-    ``Legend.scala:126`` — reproduced as a *word-boundary* membership test
-    over entity property names to avoid its false positives)."""
+    mapped field, nested-class rules included.  The reference keeps a rule
+    when its PURE text ``contains`` a field name (``Legend.scala:125-127``);
+    we keep it when the text matches ``$this.<property>`` at a word
+    boundary, so a rule over ``$this.hiringAge`` is not kept because a data
+    property is named ``hiring``.  The kept rules are the DQ rules of
+    :func:`class_expectations`, rendered in query style."""
     cls = model.get_class(mapping.class_path)
     renames = mapping.property_columns
     select_items = _entity_select(Context(
         model=model, cls=cls, renames=renames, style=QUERY_STYLE,
         guard_nullable=False))
-
-    # applicability: keep expectations whose PURE form references a mapped
-    # data property (reference: crude `contains`; Legend.scala:125-127)
-    prop_names = {p.name for p in model.all_properties(cls)}
-    from ..expectations import class_expectations  # late import, avoids cycle
-    pure_rules = class_expectations(model, cls, compile_sql=False)
-    query_rules = _query_style_rules(model, cls, renames)
-    conjuncts: list[str] = []
-    for name, pure_text in pure_rules.items():
-        mentions = any(f"$this.{p}" in pure_text for p in prop_names)
-        if mentions and name in query_rules:
-            conjuncts.append(query_rules[name])
     sql = "select " + ", ".join(select_items)
     sql += f" from {mapping.qualified_table} as `root`"
+    props = [re.escape(p.name) for p in model.all_properties(cls)]
+    if not props:
+        return sql
+    mentions = re.compile(r"\$this\.(?:%s)\b" % "|".join(props))
+    pure_rules = class_expectations(model, cls, compile_sql=False)
+    query_rules = class_expectations(model, cls, renames=renames,
+                                     style=QUERY_STYLE)
+    conjuncts = [query_rules[name] for name, text in pure_rules.items()
+                 if mentions.search(text)]
     if conjuncts:
         sql += " where " + " and ".join(conjuncts)
     return sql
-
-
-def _query_style_rules(model: LegendModel, cls: PureClass,
-                       renames: dict[str, str]) -> dict[str, str]:
-    """All expectations rendered in query style."""
-    out: dict[str, str] = {}
-    rctx = Context(model=model, cls=cls, renames=renames, style=QUERY_STYLE,
-                   guard_nullable=True)
-
-    def col(field: str) -> str:
-        return f"`root`.{renames.get(field, field)}"
-
-    for prop in model.all_properties(cls):
-        if not prop.multiplicity.nullable:
-            out[f"[{prop.name}] is mandatory"] = f"{col(prop.name)} is not null"
-        if prop.multiplicity.is_collection:
-            lb, ub = prop.multiplicity.lower, prop.multiplicity.upper
-            if ub is None:
-                out[f"[{prop.name}] has invalid size"] = (
-                    f"{col(prop.name)} is null or size({col(prop.name)}) >= {lb}")
-            else:
-                out[f"[{prop.name}] has invalid size"] = (
-                    f"{col(prop.name)} is null or (size({col(prop.name)}) "
-                    f"between {lb} and {ub})")
-        if model.is_enumeration(prop.type):
-            values = ", ".join(f"'{v}'" for v in model.get_enumeration(prop.type).values)
-            out[f"[{prop.name}] not allowed value"] = (
-                f"({col(prop.name)} is null or {col(prop.name)} in ({values}))")
-    for constraint in model.all_constraints(cls):
-        if constraint.body:
-            out[constraint.name] = to_sql(constraint.body[0], rctx)
-    return out

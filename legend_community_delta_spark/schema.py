@@ -124,19 +124,3 @@ def relaxed(schema: T.StructType) -> T.StructType:
         for f in schema.fields
     ])
 
-
-# Reverse map, Spark -> (PURE type, relational DDL type) — codegen side
-# (pure/LegendCodegen.scala:68-92).  StructType/ArrayType handled in codegen.py.
-SPARK_TO_PURE: dict[type, tuple[str, str]] = {
-    T.FloatType: ("Float", "DOUBLE"),
-    T.DoubleType: ("Decimal", "DOUBLE"),
-    T.ByteType: ("Integer", "TINYINT"),
-    T.ShortType: ("Integer", "SMALLINT"),
-    T.IntegerType: ("Integer", "INTEGER"),
-    T.LongType: ("Number", "BIGINT"),
-    T.StringType: ("String", "VARCHAR(2147483647)"),
-    T.BooleanType: ("Boolean", "BIT"),
-    T.BinaryType: ("Binary", "BINARY(2147483647)"),
-    T.DateType: ("Date", "DATE"),
-    T.TimestampType: ("DateTime", "TIMESTAMP"),
-}

@@ -107,5 +107,9 @@ def test_nested_class_expectations():
     rules = class_expectations(model, model.get_class("t::c"), compile_sql=True)
     # nested mandatory recursion with dotted names
     assert rules["[home.city] is mandatory"] == "home.city IS NOT NULL"
+    # a mapped nested field's SQL renames its head like the top-level rule
+    renamed = class_expectations(model, model.get_class("t::c"),
+                                 renames={"home": "home_col"})
+    assert renamed["[home.city] is mandatory"] == "home_col.city IS NOT NULL"
     # collections of classes are NOT recursed (Legend.scala:396-405)
     assert not any(k.startswith("[offices.") for k in rules)

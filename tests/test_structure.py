@@ -69,3 +69,60 @@ def test_vector_search_kernels_have_one_home():
     similarity = _PKG / "operators" / "similarity.py"
     assert _calls(similarity, lambda c: _fn(c) == "array_max") == [
         "_cell_col"]
+
+
+def _holders(path: pathlib.Path, match) -> list[str]:
+    """Dotted name of the innermost class/function holding each node of
+    *path* that *match* accepts; a module-level constant is named by its
+    assignment target.  Docstrings are not searched."""
+    found: list[str] = []
+
+    def visit(node: ast.AST, scope: list[str]) -> None:
+        body = getattr(node, "body", None)
+        docstring = (body[0].value if isinstance(body, list) and body
+                     and isinstance(body[0], ast.Expr)
+                     and isinstance(body[0].value, ast.Constant) else None)
+        for child in ast.iter_child_nodes(node):
+            if isinstance(child, (ast.ClassDef, ast.FunctionDef)):
+                visit(child, scope + [child.name])
+            elif isinstance(child, ast.Assign) and not scope:
+                visit(child, [getattr(child.targets[0], "id", "<module>")])
+            elif isinstance(child, ast.Expr) and child.value is docstring:
+                continue
+            else:
+                if match(child):
+                    found.append(".".join(scope) or "<module>")
+                visit(child, scope)
+
+    visit(ast.parse(path.read_text()), [])
+    return found
+
+
+def _package_holders(match) -> set[tuple[str, str]]:
+    return {(p.relative_to(_PKG).as_posix(), name)
+            for p in sorted(_PKG.rglob("*.py"))
+            for name in _holders(p, match)}
+
+
+def test_legend_compile_decisions_have_one_home():
+    """The expectation rules are written once, in ``expectations.py``, for
+    both the DQ layer and the mapping query (the demo's DuckDB oracle keeps
+    its own rule name as an independent reference); the supertype walk
+    lives only in ``LegendModel._inherited``; aggregates render only in
+    ``plans/compiler.py``; the reverse type map lives only in ``codegen``."""
+    rules = ("is mandatory", "has invalid size", "not allowed value")
+    assert _package_holders(
+        lambda n: isinstance(n, ast.Constant) and isinstance(n.value, str)
+        and any(r in n.value for r in rules)) == {
+            ("expectations.py", "_field_rules"),
+            ("demo.py", "_ORACLE_DQ_LINEITEM")}
+    assert _package_holders(
+        lambda n: isinstance(n, (ast.For, ast.comprehension))
+        and isinstance(n.iter, ast.Attribute)
+        and n.iter.attr == "super_types") == {
+            ("model/loader.py", "LegendModel._inherited")}
+    texts = {p.relative_to(_PKG).as_posix(): p.read_text()
+             for p in _PKG.rglob("*.py")}
+    assert [f for f, t in texts.items() if "stddev_pop" in t] == [
+        "plans/compiler.py"]
+    assert [f for f, t in texts.items() if "SPARK_TO_PURE" in t] == []
