@@ -5866,17 +5866,18 @@ FROM m
 
 
 def _q_delta_bridge_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Both Delta bridges end to end (round 11): a hive-partitioned
-    orders snapshot goes through ``VersionedTable.write`` ->
-    ``export_delta_log`` (the snapshot becomes a public-protocol Delta
-    table in place) -> ``sources.delta_reader.read_delta`` (log-replay
-    read with NO Delta runtime), then aggregates per status.  A hash
-    match proves the exported add actions reference exactly the right
-    files, the partition directories recover through ``basePath``, and
-    the replayed schema casts line up — the Delta interop surface the
+    """The Delta bridge end to end: a hive-partitioned orders snapshot
+    goes through ``VersionedTable.write`` (its commit is a
+    public-protocol Delta commit at the table root) ->
+    ``sources.delta_reader.read_delta`` (log-replay read with NO Delta
+    runtime), then aggregates per status.  A hash match proves the
+    commit's add actions reference exactly the right files, the
+    partition directories recover through ``basePath``, and the
+    logged schema casts line up — the Delta interop surface the
     reference's runtime provides natively (`Legend.scala:163-186`),
-    exercised standalone.  Full value oracle: the same aggregation
-    straight over orders in DuckDB."""
+    exercised standalone.  Zero-row orders read back as an empty
+    table with the written schema.  Full value oracle: the same
+    aggregation straight over orders in DuckDB."""
     import tempfile
     from .sources.delta_reader import read_delta
     from .sources.versioned import VersionedTable
@@ -5885,7 +5886,7 @@ def _q_delta_bridge_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     t = VersionedTable(spark, tempfile.mkdtemp(prefix="legend_dlt_")
                        + "/orders")
     t.write(o, partition_by=["o_orderstatus"])
-    d = read_delta(spark, t.export_delta_log())
+    d = read_delta(spark, t.path, version=0)
     return (d.groupBy("o_orderstatus")
             .agg(F.count(F.lit(1)).alias("n"),
                  F.round(F.sum("o_totalprice"), 2).alias("sum_price"),
@@ -5908,22 +5909,16 @@ ORDER BY o_orderstatus
 
 def _q_delta_time_travel_orders(spark: SparkSession,
                                 sf_dir: str) -> DataFrame:
-    """The multi-commit Delta bridge end to end (round 12): a
-    versioned twin accrues three versions — a full write, a streaming
-    SEGMENT append (O(batch) add-commit), and a hive-partitioned
-    overwrite (schema + partition change) — then
-    ``VersionedTable.export_delta_history`` writes one public-protocol
-    Delta commit per version at the table root and
-    ``sources.delta_reader.read_delta`` time-travels every version
-    with NO Delta runtime (``VERSION AS OF`` via log replay).  The
-    partitioned version also exercises the log-driven partition
-    recovery path (the ``v=N`` layout is not plain hive, so
-    ``partitionValues`` from the log are authoritative —
-    ``delta_reader.py``'s grouped literal scan).  This is the
-    reference's Delta time-travel surface (`Legend.scala:163-186`,
-    the notebooks' VERSION AS OF cells) over the exported twin.  Full
-    value oracle: each version's content restated as set algebra over
-    orders in DuckDB."""
+    """Delta time travel end to end: a versioned table accrues three
+    versions — a full write, a SEGMENT append (an O(batch) add-only
+    commit), and a hive-partitioned overwrite (schema + partition
+    change) — each one public-protocol Delta commit at the table root,
+    and ``sources.delta_reader.read_delta`` time-travels every version
+    with NO Delta runtime (``VERSION AS OF`` via log replay).  This is
+    the reference's Delta time-travel surface (`Legend.scala:163-186`,
+    the notebooks' VERSION AS OF cells) over a table any Delta reader
+    opens.  Full value oracle: each version's content restated as set
+    algebra over orders in DuckDB."""
     import tempfile
     from .sources.delta_reader import read_delta
     from .sources.versioned import VersionedTable
@@ -5935,10 +5930,9 @@ def _q_delta_time_travel_orders(spark: SparkSession,
     t.append(o.where(F.col("o_orderkey") % 3 == 1))
     t.write(o.where(F.col("o_orderkey") % 5 == 0),
             operation="OVERWRITE", partition_by=["o_orderstatus"])
-    root = t.export_delta_history()
     outs = []
     for k in (0, 1, 2):
-        d = read_delta(spark, root, version=k)
+        d = read_delta(spark, t.path, version=k)
         outs.append(
             d.agg(F.count(F.lit(1)).alias("n"),
                   F.round(F.sum("o_totalprice"), 2).alias("sum_price"),

@@ -133,13 +133,16 @@ def write_bm25_index(docs: DataFrame, path: str, text_col: str = "text",
     The repeated-retrieval scale path: build once, then every query
     reads ONLY its terms' buckets via partition pruning —
     ``|query terms| / 16**prefix_len`` of the index instead of
-    re-tokenizing the corpus per query batch."""
-    post = doc_postings(docs, text_col, id_col)
-    (post.withColumn("__bkt", F.substring(F.md5("tok"), 1, prefix_len))
-     .write.mode("overwrite").partitionBy("__bkt")
-     .parquet(f"{path}/postings"))
+    re-tokenizing the corpus per query batch.  The footer also records
+    the postings schema: an empty corpus leaves no postings file to
+    infer it from, and its index still answers (with no rows)."""
+    post = doc_postings(docs, text_col, id_col) \
+        .withColumn("__bkt", F.substring(F.md5("tok"), 1, prefix_len))
+    post.write.mode("overwrite").partitionBy("__bkt") \
+        .parquet(f"{path}/postings")
     stats = _corpus_stats(docs, text_col)
     (stats.withColumn("prefix_len", F.lit(int(prefix_len)))
+     .withColumn("postings_schema", F.lit(post.schema.json()))
      .coalesce(1).write.mode("overwrite").parquet(f"{path}/meta"))
 
 
@@ -156,14 +159,18 @@ def query_bm25_index(spark, path: str, queries: DataFrame, k: int = 10,
     pruned postings (pruning is by TERM, so each surviving term's
     posting list is complete — its df is exact)."""
     import hashlib
+    import json
+
+    from pyspark.sql.types import StructType
 
     meta = spark.read.parquet(f"{path}/meta").first()
+    schema = StructType.fromJson(json.loads(meta.postings_schema))
     qterms = _query_terms(queries)
     terms = sorted({r.tok for r in qterms.select("tok")
                     .distinct().collect()})
     buckets = sorted({hashlib.md5(t.encode("utf-8")).hexdigest()
                       [:int(meta.prefix_len)] for t in terms})
-    hit = (spark.read.parquet(f"{path}/postings")
+    hit = (spark.read.schema(schema).parquet(f"{path}/postings")
            .where(F.col("__bkt").isin(buckets))
            .where(F.col("tok").isin(terms))
            .select("tok", "doc_id", "tf", "dl"))

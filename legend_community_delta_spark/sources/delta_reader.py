@@ -1,13 +1,21 @@
-"""Read Delta Lake tables WITHOUT a Delta runtime: transaction-log
-replay over plain ``spark.read.parquet``.
+"""Delta Lake tables WITHOUT a Delta runtime: the one module that knows
+the public Delta transaction-log format, for reading and for writing.
 
-The reference's headline surface is Delta (``Legend.scala:163-186``,
-the notebooks' time travel); this container has no delta-spark wheel,
-so :mod:`.versioned` re-expresses the WRITE side on parquet.  This
-module covers the READ side of interop: a real Delta table written by
-any engine is just parquet files plus a JSON/parquet transaction log
-in the PUBLIC Delta protocol, and replaying that log yields the exact
-live file set for any version — ``VERSION AS OF`` included.
+The reference hands every table it creates to Delta
+(``Legend.scala:163-186``, the notebooks' time travel); this container
+has no delta-spark wheel.  A Delta table written by any engine is just
+parquet files plus a JSON/parquet transaction log in the PUBLIC Delta
+protocol:
+
+* READ — replaying that log yields the exact live file set for any
+  version (``VERSION AS OF`` included): :func:`read_delta`,
+  :func:`delta_history`, :func:`delta_log_versions`;
+* WRITE — :func:`write_commit` links one ``_delta_log/%020d.json``
+  commit per version (``commitInfo``, ``protocol`` at version 0,
+  ``metaData`` when the schema or partition columns change, a
+  ``remove`` per live file for a full snapshot, an ``add`` per new
+  file).  :class:`.versioned.VersionedTable` commits every version
+  through it, so its root is a Delta table at every version.
 
 Scale notes (how every Delta client works, including delta-spark):
 
@@ -20,12 +28,13 @@ Scale notes (how every Delta client works, including delta-spark):
   driver, not data;
 * the assembled DataFrame is a plain parquet scan over the live
   files, so Catalyst sees a parquet relation (predicate pushdown,
-  column pruning, AQE all apply).  When the files are hive-laid AND
-  the directory names agree with the log's ``partitionValues``, ONE
-  multi-file scan with ``basePath`` recovers partitions natively
-  (directory-level pruning); otherwise the log's ``partitionValues``
-  are authoritative and files are scanned per distinct partition
-  tuple with literal partition columns — same pruning, log-driven.
+  column pruning, AQE all apply).  When every file sits in hive
+  directories below ONE common base directory and those directory
+  names agree with the log's ``partitionValues``, ONE multi-file scan
+  with ``basePath`` recovers partitions natively (directory-level
+  pruning); otherwise the log's ``partitionValues`` are authoritative
+  and files are scanned per distinct partition tuple with literal
+  partition columns — same pruning, log-driven.
 
 Unsupported — these RAISE pointedly, never return wrong rows:
 multi-part checkpoints, v2 checkpoints with sidecars, deletion
@@ -40,15 +49,42 @@ from __future__ import annotations
 
 import json
 import os
-from urllib.parse import unquote
+import time
+import uuid
+from urllib.parse import quote, unquote
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 from ..functions import local_df
 
 __all__ = ["read_delta", "delta_log_versions", "delta_history"]
 
 _HIVE_NULL = "__HIVE_DEFAULT_PARTITION__"
+
+
+def _log_dir(path: str, required: bool = True) -> str | None:
+    """The ``_delta_log`` directory of the table at *path*.  When there
+    is none, raise (the default) or return None."""
+    log_dir = os.path.join(path.rstrip("/"), "_delta_log")
+    if os.path.isdir(log_dir):
+        return log_dir
+    if required:
+        raise ValueError(f"[{path}] has no _delta_log — not a Delta "
+                         "table")
+    return None
+
+
+def _hive_values(pieces: list[str]) -> dict[str, str | None]:
+    """Partition values of the hive directory components ``k=v`` among
+    *pieces*, with Spark's path escaping undone on key and value (the
+    log stores logical values, not directory names)."""
+    out: dict[str, str | None] = {}
+    for piece in pieces:
+        if "=" in piece:
+            k, _, val = piece.partition("=")
+            out[unquote(k)] = None if val == _HIVE_NULL else unquote(val)
+    return out
 
 
 def _log_entries(log_dir: str) -> tuple[list[int], dict[int, str]]:
@@ -72,45 +108,44 @@ def _checkpoints(log_dir: str) -> dict[int, str]:
     return out
 
 
+def _commit_info(commit_file: str) -> dict:
+    """The ``commitInfo`` action of one commit file (``{}`` without one
+    — it is optional in the protocol)."""
+    with open(commit_file) as fh:
+        for line in fh:
+            if line.strip():
+                action = json.loads(line)
+                if "commitInfo" in action:
+                    return action["commitInfo"]
+    return {}
+
+
 def delta_log_versions(path: str) -> list[int]:
     """The commit versions present in a Delta table's log."""
-    log_dir = os.path.join(path, "_delta_log")
-    if not os.path.isdir(log_dir):
-        raise ValueError(f"[{path}] has no _delta_log — not a Delta "
-                         "table")
-    versions, _ = _log_entries(log_dir)
+    versions, _ = _log_entries(_log_dir(path))
     return versions
+
+
+def commit_infos(path: str) -> dict[int, dict]:
+    """{version: commitInfo} for every JSON commit in the log."""
+    versions, commit_files = _log_entries(_log_dir(path))
+    return {v: _commit_info(commit_files[v]) for v in versions}
 
 
 def delta_history(spark: SparkSession, path: str) -> DataFrame:
     """``DESCRIBE HISTORY`` for a Delta table without a Delta runtime:
     one row per commit, newest first — (version, timestamp,
     operation), from each commit's ``commitInfo`` action (logs written
-    without commitInfo — it is optional in the protocol — fall back to
-    the commit file's mtime and a null operation)."""
-    path = path.rstrip("/")
-    log_dir = os.path.join(path, "_delta_log")
-    if not os.path.isdir(log_dir):
-        raise ValueError(f"[{path}] has no _delta_log — not a Delta "
-                         "table")
-    versions, commit_files = _log_entries(log_dir)
+    without commitInfo fall back to the commit file's mtime and a null
+    operation)."""
+    versions, commit_files = _log_entries(_log_dir(path))
     rows = []
-    for v in versions:
-        ts, op = None, None
-        with open(commit_files[v]) as fh:
-            for line in fh:
-                if not line.strip():
-                    continue
-                action = json.loads(line)
-                if "commitInfo" in action:
-                    ci = action["commitInfo"]
-                    ts = ci.get("timestamp")
-                    op = ci.get("operation")
-                    break
+    for v in reversed(versions):
+        ci = _commit_info(commit_files[v])
+        ts = ci.get("timestamp")
         if ts is None:
             ts = int(os.stat(commit_files[v]).st_mtime * 1000)
-        rows.append((v, float(ts) / 1000.0, op))
-    rows.reverse()
+        rows.append((v, float(ts) / 1000.0, ci.get("operation")))
     return local_df(spark, rows,
                     "version int, timestamp double, operation string")
 
@@ -176,44 +211,18 @@ def _gate_deletion_vector(path: str, dv) -> None:
             "rows — read it with delta-spark")
 
 
-def _dir_partition_values(rel_decoded: str) -> dict[str, str | None]:
-    """Partition values encoded in a file's directory components
-    (hive layout), after URL-decoding — ``{}`` for a flat path."""
-    out: dict[str, str | None] = {}
-    for piece in rel_decoded.split("/")[:-1]:
-        if "=" in piece:
-            k, _, val = piece.partition("=")
-            out[k] = None if val == _HIVE_NULL else unquote(val)
-    return out
-
-
-def read_delta(spark: SparkSession, path: str,
-               version: int | None = None,
-               timestamp_ms: float | None = None) -> DataFrame:
-    """Open a Delta table (``VERSION AS OF`` *version* /
-    ``TIMESTAMP AS OF`` *timestamp_ms*, latest when both omitted) by
-    replaying its transaction log — no Delta runtime.
-
-    Returns one parquet scan over the live files with the log's
-    schema enforced.  Partition columns come from the log's
-    ``partitionValues`` (the protocol's source of truth): when the
-    on-disk hive directories agree with the log, one ``basePath``
-    scan recovers them natively; otherwise (non-hive layout, or
-    extra ``k=v`` path components the log does not declare) files
-    are scanned per distinct partition tuple with literal columns.
-    An empty live set (a table whose files were all removed) returns
-    an EMPTY DataFrame with the log's schema, like Delta does.
+def _replay(spark: SparkSession, path: str, version: int | None = None,
+            timestamp_ms: float | None = None
+            ) -> tuple[dict[str, dict], dict | None, dict | None]:
+    """Replay the log up to *version* / *timestamp_ms* (latest when
+    both omitted): ``(live, metaData, protocol)`` with *live* mapping
+    each live ``add.path`` to its ``partitionValues``.
 
     Requesting a version below the earliest reconstructable state
     (its commit files vacuumed and no checkpoint at/below it) raises
     a version-out-of-range error rather than replaying an incomplete
-    file set.
-    """
-    path = path.rstrip("/")
-    log_dir = os.path.join(path, "_delta_log")
-    if not os.path.isdir(log_dir):
-        raise ValueError(f"[{path}] has no _delta_log — not a Delta "
-                         "table")
+    file set."""
+    log_dir = _log_dir(path)
     versions, commit_files = _log_entries(log_dir)
     cps = _checkpoints(log_dir)
     has_exotic_cp = any(
@@ -297,7 +306,8 @@ def read_delta(spark: SparkSession, path: str,
             md = r["metaData"] if "metaData" in cols else None
             if md is not None and md["id"] is not None:
                 m = md.asDict()
-                meta = {"schemaString": m["schemaString"],
+                meta = {"id": m["id"],
+                        "schemaString": m["schemaString"],
                         "partitionColumns":
                             list(m.get("partitionColumns") or []),
                         "configuration":
@@ -309,9 +319,7 @@ def read_delta(spark: SparkSession, path: str,
                     protocol["readerFeatures"] = \
                         list(protocol["readerFeatures"])
 
-    for v in versions:
-        if v < start or v > target:
-            continue
+    for v in range(start, target + 1):
         with open(commit_files[v]) as fh:
             for line in fh:
                 if not line.strip():
@@ -328,12 +336,47 @@ def read_delta(spark: SparkSession, path: str,
                     meta = action["metaData"]
                 elif "protocol" in action:
                     protocol = action["protocol"]
+    return live, meta, protocol
+
+
+def _hive_base(rel: str, part_cols: list[str],
+               pvals: dict) -> str | None:
+    """The directory below which *rel*'s last ``len(part_cols)``
+    directory components encode exactly its log *pvals*; None when
+    they do not (a non-hive layout)."""
+    dirs = rel.split("/")[:-1]
+    cut = len(dirs) - len(part_cols)
+    if cut < 0 or _hive_values(dirs[cut:]) != \
+            {c: pvals.get(c) for c in part_cols}:
+        return None
+    return "/".join(dirs[:cut])
+
+
+def read_delta(spark: SparkSession, path: str,
+               version: int | None = None,
+               timestamp_ms: float | None = None) -> DataFrame:
+    """Open a Delta table (``VERSION AS OF`` *version* /
+    ``TIMESTAMP AS OF`` *timestamp_ms*, latest when both omitted) by
+    replaying its transaction log — no Delta runtime.
+
+    Returns one parquet scan over the live files with the log's
+    schema enforced.  Partition columns come from the log's
+    ``partitionValues`` (the protocol's source of truth): when the
+    on-disk hive directories below one common base agree with the
+    log, one ``basePath`` scan recovers them natively; otherwise
+    (non-hive layout, or files spread over several base directories)
+    files are scanned per distinct partition tuple with literal
+    columns.  An empty live set (a table whose files were all removed,
+    or a snapshot written with zero rows) returns an EMPTY DataFrame
+    with the log's schema, like Delta does.
+    """
+    path = path.rstrip("/")
+    live, meta, protocol = _replay(spark, path, version, timestamp_ms)
     _gate_protocol(path, protocol)
     if meta is None:
         raise ValueError(f"[{path}] log has no metaData action")
     _gate_column_mapping(path, meta)
 
-    from pyspark.sql.types import StructType
     full_schema = StructType.fromJson(json.loads(meta["schemaString"]))
     if not live:
         # a valid state: every file removed — empty table, real schema
@@ -343,23 +386,21 @@ def read_delta(spark: SparkSession, path: str,
         [f for f in full_schema.fields if f.name not in part_cols])
     # add.path is a URL-encoded relative URI per the protocol — decode
     # before touching the filesystem
-    decoded = {p: unquote(p) for p in live}
+    decoded = {p: unquote(p).replace(os.sep, "/") for p in live}
     if not part_cols:
         files = [os.path.join(path, decoded[p]) for p in live]
         return spark.read.schema(data_schema).parquet(*files)
 
     # Partitioned: the log's partitionValues are authoritative.  Fast
-    # path — every file's hive directory components EXACTLY encode its
-    # log partitionValues (no extra k=v dirs Spark would misinfer) —
-    # one basePath scan, native directory pruning.
-    hive_ok = all(
-        _dir_partition_values(decoded[p].replace(os.sep, "/"))
-        == {c: pv.get(c) for c in part_cols}
-        for p, pv in live.items())
+    # path — every file's trailing hive directories EXACTLY encode its
+    # log partitionValues below ONE base directory (so no other k=v
+    # dir is in Spark's view) — one basePath scan, native pruning.
+    bases = {_hive_base(decoded[p], part_cols, pv)
+             for p, pv in live.items()}
     from pyspark.sql import functions as F
-    if hive_ok:
+    if len(bases) == 1 and None not in bases:
         files = [os.path.join(path, decoded[p]) for p in live]
-        df = spark.read.option("basePath", path) \
+        df = spark.read.option("basePath", f"{path}/{bases.pop()}") \
             .schema(data_schema).parquet(*files)
         for f in full_schema.fields:
             if f.name in part_cols:
@@ -388,3 +429,91 @@ def read_delta(spark: SparkSession, path: str,
         g = g.select(*order)
         out = g if out is None else out.unionByName(g)
     return out
+
+
+# -- write side --------------------------------------------------------
+
+
+def _walk_parquet_adds(data_dir: str, base: str) -> list[dict]:
+    """``add`` payloads for every parquet file under *data_dir*:
+    ``path`` relative to the table root *base* as a URL-ENCODED
+    relative URI (the protocol's add.path contract — on-disk names may
+    contain literal ``%XX`` from Spark's own hive escaping, which must
+    survive a client's decode), ``partitionValues`` from the hive
+    directory components below *data_dir*.  Skips ``_``-prefixed
+    dirs."""
+    out = []
+    for root, _dirs, files in os.walk(data_dir):
+        rel_root = os.path.relpath(root, data_dir)
+        # compare RELATIVE to the data dir — the absolute path may
+        # legitimately contain the substring (pytest tmp dirs)
+        if rel_root != "." and rel_root.split(os.sep)[0].startswith("_"):
+            continue
+        for name in files:
+            if not name.endswith(".parquet"):
+                continue
+            full = os.path.join(root, name)
+            rel = os.path.relpath(full, base).replace(os.sep, "/")
+            st = os.stat(full)
+            out.append({"path": quote(rel, safe="/=-._~!$&'()*+,;:@"),
+                        "partitionValues": _hive_values(
+                            os.path.relpath(full, data_dir)
+                            .split(os.sep)[:-1]),
+                        "size": st.st_size,
+                        "modificationTime": int(st.st_mtime * 1000),
+                        "dataChange": True})
+    return out
+
+
+def write_commit(spark: SparkSession, path: str, version: int,
+                 data_dir: str, info: dict,
+                 schema: StructType | None = None,
+                 partition_cols: list[str] | None = None,
+                 replace: bool = True) -> None:
+    """Commit *version* of the Delta table at *path*: one JSONL file
+    ``_delta_log/%020d.json`` holding ``commitInfo`` (*info* plus the
+    timestamp), ``protocol`` at version 0, ``metaData`` when *schema*
+    or *partition_cols* differ from the previous version's (None keeps
+    them), a ``remove`` for every live file when *replace* (a full
+    snapshot), and an ``add`` for each parquet file under *data_dir*.
+
+    The file is hard-linked into place, so two writers racing to the
+    same version make the loser raise :class:`FileExistsError` instead
+    of silently replacing version N — the log stays linear (Delta's
+    optimistic-concurrency commit point)."""
+    ts = int(time.time() * 1000)
+    live: dict[str, dict] = {}
+    meta: dict | None = None
+    if version > 0:
+        live, meta, _ = _replay(spark, path, version - 1)
+    actions: list[dict] = [{"commitInfo": {"timestamp": ts, **info}}]
+    if meta is None:
+        actions.append({"protocol": {"minReaderVersion": 1,
+                                     "minWriterVersion": 2}})
+    schema_string = meta["schemaString"] if schema is None \
+        else schema.json()
+    parts = meta["partitionColumns"] if partition_cols is None \
+        else list(partition_cols)
+    if meta is None or (schema_string, parts) != \
+            (meta["schemaString"], list(meta["partitionColumns"])):
+        actions.append({"metaData": {
+            "id": meta["id"] if meta else str(uuid.uuid4()),
+            "format": {"provider": "parquet", "options": {}},
+            "schemaString": schema_string,
+            "partitionColumns": parts,
+            "configuration": {},
+            "createdTime": ts}})
+    if replace:
+        actions += [{"remove": {"path": p, "deletionTimestamp": ts,
+                                "dataChange": True}} for p in live]
+    actions += [{"add": a} for a in _walk_parquet_adds(data_dir, path)]
+    log_dir = os.path.join(path, "_delta_log")
+    os.makedirs(log_dir, exist_ok=True)
+    tmp = os.path.join(log_dir, f".{version:020d}.{uuid.uuid4().hex}.tmp")
+    with open(tmp, "w") as fh:
+        for action in actions:
+            fh.write(json.dumps(action) + "\n")
+    try:
+        os.link(tmp, os.path.join(log_dir, f"{version:020d}.json"))
+    finally:
+        os.unlink(tmp)

@@ -15,9 +15,10 @@ Delta when importable or degrades explicitly:
 
 For REAL time-travel/history/merge semantics without the Delta runtime,
 use :class:`..sources.versioned.VersionedTable` — immutable parquet
-snapshots behind a JSON commit log (path-addressed rather than
+snapshots behind a public Delta log (path-addressed rather than
 catalog-addressed, which is why it is a separate surface and not a
-silent fallback here).
+silent fallback here); its root answers :func:`read_version` and
+:func:`table_history` like any Delta table path.
 """
 
 from __future__ import annotations
@@ -25,6 +26,8 @@ from __future__ import annotations
 import uuid
 
 from pyspark.sql import DataFrame, SparkSession
+
+from .delta_reader import _log_dir, delta_history, read_delta
 
 
 def _delta_available() -> bool:
@@ -43,20 +46,13 @@ class DeltaRequiredError(RuntimeError):
             f"recreate the table with table_format='DELTA'.")
 
 
-def _delta_dir(table: str) -> bool:
-    """*table* names a Delta table DIRECTORY (has a ``_delta_log``)."""
-    import os
-    return os.path.isdir(os.path.join(table.rstrip("/"), "_delta_log"))
-
-
 def read_version(spark: SparkSession, table: str, version: int) -> DataFrame:
     """Time-travel read: ``SELECT * FROM t VERSION AS OF n``.
 
     Catalog tables need delta-spark; a Delta table PATH works without
     any Delta runtime through :mod:`.delta_reader`'s log replay."""
     if not _delta_available():
-        if _delta_dir(table):
-            from .delta_reader import read_delta
+        if _log_dir(table, required=False):
             return read_delta(spark, table, version=version)
         raise DeltaRequiredError("time travel (VERSION AS OF)")
     return spark.sql(f"SELECT * FROM {table} VERSION AS OF {version}")
@@ -66,8 +62,7 @@ def table_history(spark: SparkSession, table: str) -> DataFrame:
     """``DESCRIBE HISTORY``.  Catalog tables need delta-spark; a Delta
     table PATH answers from the transaction log directly."""
     if not _delta_available():
-        if _delta_dir(table):
-            from .delta_reader import delta_history
+        if _log_dir(table, required=False):
             return delta_history(spark, table)
         raise DeltaRequiredError("DESCRIBE HISTORY")
     return spark.sql(f"DESCRIBE HISTORY {table}")

@@ -4,96 +4,58 @@ without a Delta runtime.
 The reference's headline table services are Delta's (time travel,
 ``DESCRIBE HISTORY``, ``MERGE`` — `databricks-scala.ipynb` drift cells;
 ``Legend.scala:163-186`` createIfNotExists).  No delta-spark wheel exists
-in this environment, so :mod:`sources.tables` gates those behind pointed
-errors.  This module supplies the same *semantics* on plain parquet +
-a JSON commit log, Delta-style in miniature:
+in this environment, so :mod:`sources.tables` gates the catalog paths
+behind pointed errors.  This module writes the same *semantics* as a
+real Delta table: every version is one public-protocol commit, written
+and replayed by :mod:`.delta_reader` (the one module that knows the log
+format), so any Delta reader opens the table root at every version:
 
 ::
 
     path/
-      _versions/000000.json   {"version": 0, "ts": ..., "operation": ...}
-      _versions/000001.json
+      <Delta log>             one JSON commit per version: the
+                              operation, the write token, schema
+                              changes, removed and added files
       v=0/part-*.parquet      (immutable snapshot)
-      v=1/part-*.parquet
+      v=1/part-*.parquet      (next snapshot, or a segment of new rows)
 
-* every write is a NEW immutable snapshot directory — readers of old
-  versions are never disturbed (snapshot isolation for free);
-* the commit log is one tiny JSON per version (metadata-sized; the
-  1000-executor cluster never lists data files to resolve a version);
+* every full write is a NEW immutable snapshot directory whose commit
+  removes every live file — readers of old versions are never
+  disturbed (snapshot isolation for free);
+* a SEGMENT (:meth:`VersionedTable.append`, :meth:`~VersionedTable.
+  append_batch`) writes only its own rows, and its commit only adds
+  them — Delta's incremental append, O(batch);
 * ``merge`` reads the latest snapshot, anti-joins, and writes the next
   snapshot — row-level upsert semantics with full lineage retained.
 
-This is NOT Delta (single-writer by design — a commit RACE fails
-loudly with :class:`ConcurrentWriteError` rather than losing a version,
-but there is no retry/reconcile protocol; file-level data skipping
-lives in :mod:`..operators.layout`); it is the honest standalone
-re-expression of the reference's time-travel surface for environments
-without the Delta runtime.  When delta-spark IS importable, prefer
-:mod:`sources.tables`' Delta paths.
+This module keeps the snapshot, segment, write-token and vacuum policy.
+It is single-writer by design — a commit RACE fails loudly with
+:class:`ConcurrentWriteError` rather than losing a version, but there
+is no retry/reconcile protocol; file-level data skipping lives in
+:mod:`..operators.layout`.
 
 Write integrity: every write stages into a unique token-stamped
 directory and reaches ``v=N`` only through one atomic ``os.rename``
-(the data commit point), then links its log entry via O_EXCL with the
-token recorded.  A racing writer therefore cannot replace committed
-OR in-flight data — it loses the rename or the link and raises; a
-crash between the two leaves a token-stamped orphan that only the
-same stream batch's replay (matching ``batch_id``) may clear
+(the data commit point), then links its Delta commit via O_EXCL with
+the token recorded in the commit.  A racing writer therefore cannot
+replace committed OR in-flight data — it loses the rename or the link
+and raises; a crash between the two leaves a token-stamped orphan that
+only the same stream batch's replay (matching ``batch_id``) may clear
 automatically, everything else goes through the explicit
 :meth:`VersionedTable.recover_orphans`.  ``read`` re-checks the token
-against the commit entry.
+against the commit.
 """
 
 from __future__ import annotations
 
 import json
 import os
-import time
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
-from ..functions import local_df
-
-
-_HIVE_NULL = "__HIVE_DEFAULT_PARTITION__"
-
-
-def _walk_parquet_adds(snap: str, base: str) -> list[dict]:
-    """Delta ``add`` payloads for every parquet file under *snap*:
-    ``path`` relative to *base* as a URL-ENCODED relative URI (the
-    protocol's add.path contract — on-disk names may contain literal
-    ``%XX`` from Spark's own hive escaping, which must survive a
-    client's decode), ``partitionValues`` from the hive directory
-    components below *snap* with Spark's path escaping UNDONE (the
-    log stores logical values, not directory names).  Skips
-    ``_``-prefixed dirs (a previously exported ``_delta_log``,
-    ``_versions``)."""
-    from urllib.parse import quote, unquote
-    out = []
-    for root, _dirs, files in os.walk(snap):
-        rel_root = os.path.relpath(root, snap)
-        # compare RELATIVE to the snapshot — the absolute path may
-        # legitimately contain the substring (pytest tmp dirs)
-        if rel_root != "." and rel_root.split(os.sep)[0].startswith("_"):
-            continue
-        for name in files:
-            if not name.endswith(".parquet"):
-                continue
-            full = os.path.join(root, name)
-            rel = os.path.relpath(full, base).replace(os.sep, "/")
-            pvals = {}
-            for piece in os.path.relpath(full, snap) \
-                    .split(os.sep)[:-1]:
-                if "=" in piece:
-                    k, _, val = piece.partition("=")
-                    pvals[unquote(k)] = (None if val == _HIVE_NULL
-                                         else unquote(val))
-            st = os.stat(full)
-            out.append({"path": quote(rel, safe="/=-._~!$&'()*+,;:@"),
-                        "partitionValues": pvals,
-                        "size": st.st_size,
-                        "modificationTime": int(st.st_mtime * 1000),
-                        "dataChange": True})
-    return out
+from .delta_reader import (_log_dir, _replay, commit_infos, delta_history,
+                           read_delta, write_commit)
 
 
 class ConcurrentWriteError(RuntimeError):
@@ -103,57 +65,47 @@ class ConcurrentWriteError(RuntimeError):
 
 
 class VersionedTable:
-    """A parquet table with an append-only version log.
+    """A parquet table whose every version is a Delta commit.
 
-    ``VersionedTable(spark, path)`` attaches to (or creates) the store at
-    *path*.  All methods are driver-light: version resolution reads one
-    directory listing of tiny JSON files; data moves only through
-    distributed parquet reads/writes.
+    ``VersionedTable(spark, path)`` attaches to (or creates) the table
+    at *path*.  All methods are driver-light: version resolution reads
+    the small JSON commit files; data moves only through distributed
+    parquet reads/writes.
     """
 
     def __init__(self, spark: SparkSession, path: str):
         self.spark = spark
         self.path = path.rstrip("/")
-        self._log_dir = f"{self.path}/_versions"
 
     # -- commit log -------------------------------------------------------
 
-    def _commits(self) -> list[dict]:
-        if not os.path.isdir(self._log_dir):
-            return []
-        out = []
-        for name in sorted(os.listdir(self._log_dir)):
-            if name.endswith(".json"):
-                with open(f"{self._log_dir}/{name}") as fh:
-                    out.append(json.load(fh))
-        return out
+    def _infos(self) -> dict[int, dict]:
+        """{version: commit info} of every commit ({} before the first)."""
+        if _log_dir(self.path, required=False) is None:
+            return {}
+        return commit_infos(self.path)
 
     def latest_version(self) -> int | None:
-        commits = self._commits()
-        return commits[-1]["version"] if commits else None
+        return max(self._infos(), default=None)
 
-    def _commit(self, version: int, operation: str, meta: dict) -> None:
-        os.makedirs(self._log_dir, exist_ok=True)
-        entry = {"version": version, "timestamp": time.time(),
-                 "operation": operation, **meta}
-        tmp = f"{self._log_dir}/.{version:06d}.json.tmp"
-        with open(tmp, "w") as fh:
-            json.dump(entry, fh)
-        # hard-link into place: O_EXCL-style commit point, so TWO
-        # writers racing to the same version make the LOSER raise
-        # (FileExistsError) instead of silently replacing version N —
-        # the log stays linear (Delta's optimistic-concurrency commit
-        # in miniature; os.replace would paper over the race)
-        final = f"{self._log_dir}/{version:06d}.json"
+    def _commit(self, version: int, operation: str, meta: dict,
+                schema: StructType | None = None,
+                partition_by: list[str] | None = None) -> None:
+        """Link *version*'s Delta commit for the ``v=N`` directory — a
+        segment (``meta["segment"]``) only adds its files, a full
+        snapshot also removes every live one.  Two writers racing to
+        the same version make the LOSER raise instead of silently
+        replacing version N."""
         try:
-            os.link(tmp, final)
+            write_commit(self.spark, self.path, version,
+                         f"{self.path}/v={version}",
+                         {"operation": operation, **meta}, schema,
+                         partition_by, replace=not meta.get("segment"))
         except FileExistsError:
-            os.unlink(tmp)
             raise ConcurrentWriteError(
                 f"version {version} at [{self.path}] was committed by "
                 "a concurrent writer; re-read latest_version() and "
                 "retry") from None
-        os.unlink(tmp)
 
     # -- writes -----------------------------------------------------------
     #
@@ -169,8 +121,8 @@ class VersionedTable:
     #   3. ``os.rename(staging, v=N)`` is the DATA commit point —
     #      atomic, and it FAILS if ``v=N`` exists, so two racing
     #      writers can never interleave data under one version;
-    #   4. the O_EXCL commit-log link (:meth:`_commit`) records the
-    #      token, tying the log entry to exactly the bytes renamed in
+    #   4. the O_EXCL Delta commit link (:meth:`_commit`) records the
+    #      token, tying the commit to exactly the bytes renamed in
     #      step 3.
     #
     # A crash between 3 and 4 leaves a token-stamped orphan at
@@ -219,7 +171,7 @@ class VersionedTable:
             return
         except OSError:
             pass
-        committed = os.path.isfile(f"{self._log_dir}/{version:06d}.json")
+        committed = version in self._infos()
         if not committed and batch_id is not None:
             tok = self._dir_token(version)
             if tok is not None and tok.get("batch_id") == batch_id:
@@ -245,6 +197,7 @@ class VersionedTable:
         live (the single-writer recovery step the write path refuses
         to take implicitly); returns the removed paths."""
         import shutil
+        committed = self._infos()
         removed = []
         for name in sorted(os.listdir(self.path)):
             full = f"{self.path}/{name}"
@@ -256,7 +209,7 @@ class VersionedTable:
                     v = int(name[2:])
                 except ValueError:
                     continue
-                if not os.path.isfile(f"{self._log_dir}/{v:06d}.json"):
+                if v not in committed:
                     shutil.rmtree(full)
                     removed.append(full)
         return removed
@@ -269,40 +222,65 @@ class VersionedTable:
         *partition_by* hive-partitions the snapshot directory
         (``col=value/`` subdirs) so Spark prunes whole directories on
         equality predicates natively — the coarse layer above
-        :mod:`..operators.layout`'s file-level min/max skipping."""
-        m = dict(meta or {})
-        if partition_by:
-            m["partition_by"] = list(partition_by)
+        :mod:`..operators.layout`'s file-level min/max skipping.  The
+        commit's schema is ``df.schema``, so a snapshot written with
+        zero rows reads back empty with that schema."""
         staging, token = self._stage(df, {"operation": operation},
                                      partition_by)
         latest = self.latest_version()
         version = 0 if latest is None else latest + 1
         self._promote(staging, version)
-        self._commit(version, operation, {**m, "write_token": token})
+        self._commit(version, operation,
+                     {**(meta or {}), "write_token": token}, df.schema,
+                     list(partition_by or []))
         return version
+
+    def _segment_schema(self, df: DataFrame
+                        ) -> tuple[StructType, list[str]]:
+        """The table schema once *df* is appended (new columns go last;
+        older files read them as null) and the table's partition
+        columns.  A shared column whose type changes raises here, at
+        write time."""
+        if self.latest_version() is None:
+            return df.schema, []
+        _live, meta, _ = _replay(self.spark, self.path)
+        schema = StructType.fromJson(json.loads(meta["schemaString"]))
+        have = {f.name: f.dataType.simpleString() for f in schema.fields}
+        for f in df.schema.fields:
+            new = f.dataType.simpleString()
+            if f.name not in have:
+                schema = schema.add(f)
+            elif have[f.name] != new:
+                raise ValueError(
+                    f"cannot append to [{self.path}]: column {f.name} is "
+                    f"{have[f.name]} in the table but {new} in the new "
+                    "rows; cast it, or write() a new snapshot")
+        return schema, list(meta["partitionColumns"])
 
     def _write_segment(self, df: DataFrame, operation: str,
                        meta: dict) -> int:
         """Commit *df* as a SEGMENT version: only the NEW rows hit disk
-        (O(batch)); :meth:`read` assembles base snapshot + segments
-        from the commit log.  Crash-safe via the staged-write protocol
-        (see the section comment): a replayed stream batch clears ONLY
-        an orphan stamped with its own ``batch_id``."""
+        (O(batch)), laid out with the table's partition columns, and
+        the commit only adds them.  Crash-safe via the staged-write
+        protocol (see the section comment): a replayed stream batch
+        clears ONLY an orphan stamped with its own ``batch_id``."""
+        schema, partition_by = self._segment_schema(df)
         batch_id = meta.get("batch_id")
         staging, token = self._stage(
-            df, {"operation": operation, "batch_id": batch_id})
+            df, {"operation": operation, "batch_id": batch_id},
+            partition_by)
         latest = self.latest_version()
         version = 0 if latest is None else latest + 1
         self._promote(staging, version, batch_id=batch_id)
         self._commit(version, operation,
-                     {**meta, "segment": True, "write_token": token})
+                     {**meta, "segment": True, "write_token": token},
+                     schema, partition_by)
         return version
 
     def append(self, df: DataFrame) -> int:
         """Append rows as a segment version — O(batch), not O(table):
         the appended version's directory contains ONLY the new rows;
-        the logical snapshot at that version is previous ∪ *df*,
-        assembled by :meth:`read` from the commit log.  Run
+        the logical snapshot at that version is previous ∪ *df*.  Run
         :meth:`compact` periodically to fold segments back into one
         full snapshot."""
         if self.latest_version() is None:
@@ -326,14 +304,12 @@ class VersionedTable:
         ``txnVersion``/``txnAppId`` options implement.
 
         Scale: the batch writes ONLY ITS OWN rows as a SEGMENT version
-        (``segment: true`` in the commit); :meth:`read` assembles the
-        latest full snapshot plus every later segment — Delta's
-        add-file log in miniature.  A per-batch full-table rewrite
-        (what :meth:`append` does) would be O(table) every trigger;
-        this is O(batch).  Run :meth:`compact` periodically to fold
-        segments back into one snapshot.
+        whose commit adds just those files — Delta's incremental
+        append.  A per-batch full-table rewrite would be O(table) every
+        trigger; this is O(batch).  Run :meth:`compact` periodically
+        to fold segments back into one snapshot.
         """
-        seen = {c.get("batch_id") for c in self._commits()
+        seen = {c.get("batch_id") for c in self._infos().values()
                 if c.get("operation") == "STREAM_APPEND"}
         if batch_id in seen:
             return None
@@ -348,10 +324,10 @@ class VersionedTable:
         (``keep ∪ updates``), so a small upsert against a large table
         pays a whole-table write, unlike Delta's MERGE which rewrites
         only touched files.  The immutable-snapshot-directory layout
-        has no per-file add/remove granularity to do better; for
-        high-frequency small batches use :meth:`append_batch`
-        (O(batch) segments) and reconcile duplicates at read time, or
-        batch upserts and merge once."""
+        does not track which files a key lives in; for high-frequency
+        small batches use :meth:`append_batch` (O(batch) segments) and
+        reconcile duplicates at read time, or batch upserts and merge
+        once."""
         latest = self.latest_version()
         if latest is None:
             return self.write(updates, "MERGE", {"keys": keys})
@@ -364,22 +340,13 @@ class VersionedTable:
 
     def read(self, version: int | None = None) -> DataFrame:
         """Read a snapshot (``VERSION AS OF``); latest when *version* is
-        omitted.
-
-        A full-snapshot version reads one directory.  When streaming
-        segments (:meth:`append_batch`) sit on top of the last full
-        snapshot, the view at *version* is the union of that snapshot
-        (if any) and every segment up to *version* — resolved from the
-        commit LOG (metadata), never by listing data files."""
-        latest = self.latest_version()
-        if latest is None:
+        omitted — a Delta log replay (:func:`.delta_reader.read_delta`)
+        over the table root, segments included."""
+        infos = self._infos()
+        if not infos:
             raise ValueError(f"versioned table at [{self.path}] is empty")
-        v = latest if version is None else version
-        if not 0 <= v <= latest:
-            raise ValueError(
-                f"version {v} out of range [0, {latest}] at [{self.path}]")
-        commits = {c["version"]: c for c in self._commits()}
-        want = commits.get(v, {}).get("write_token")
+        v = max(infos) if version is None else version
+        want = infos.get(v, {}).get("write_token")
         if want is not None:
             tok = self._dir_token(v)
             if tok is not None and tok.get("token") != want:
@@ -387,65 +354,31 @@ class VersionedTable:
                     f"version {v} at [{self.path}]: data directory "
                     "token does not match its commit entry — the "
                     "store was corrupted by an out-of-protocol write")
-        if not commits.get(v, {}).get("segment"):
-            return self.spark.read.parquet(f"{self.path}/v={v}")
-        parts = []
-        base = v
-        for i in range(v, -1, -1):
-            parts.append(f"{self.path}/v={i}")
-            base = i
-            if not commits.get(i, {}).get("segment"):
-                break
-        parts.reverse()  # base snapshot first: its schema leads
-        if not commits.get(base, {}).get("partition_by"):
-            # fast path: ONE multi-root scan (a per-part union costs a
-            # separate file listing + scan per segment — 6x slower on a
-            # 10-segment chain in BENCH_HISTORY); mergeSchema keeps
-            # schema evolution across segments correct (files missing
-            # a later column yield nulls, like unionByName)
-            return self.spark.read.option("mergeSchema", "true") \
-                .parquet(*parts)
-        # hive-partitioned base: its partition column lives in
-        # directory names while plain segment dirs carry it as a data
-        # column — a multi-root read cannot reconcile that, so read
-        # each part natively and align by name
-        out = self.spark.read.parquet(parts[0])
-        for p in parts[1:]:
-            out = out.unionByName(self.spark.read.parquet(p),
-                                  allowMissingColumns=True)
-        return out
+        return read_delta(self.spark, self.path, version=v)
 
     def history(self) -> DataFrame:
         """``DESCRIBE HISTORY`` analogue: one row per version, newest
         first — (version, timestamp, operation)."""
-        commits = self._commits()
-        if not commits:
+        if self.latest_version() is None:
             raise ValueError(f"versioned table at [{self.path}] is empty")
-        rows = [(c["version"], float(c["timestamp"]), c["operation"])
-                for c in reversed(commits)]
-        return local_df(self.spark, rows,
-                        "version int, timestamp double, operation string")
+        return delta_history(self.spark, self.path)
 
     def vacuum(self, keep_last: int = 1) -> list[int]:
         """Drop snapshot directories older than the last *keep_last*
         versions (the storage-cost control); returns dropped versions.
         The commit log keeps every entry so history stays complete."""
         import shutil
-        latest = self.latest_version()
-        if latest is None:
+        infos = self._infos()
+        if not infos:
             return []
-        cutoff = latest - max(keep_last, 1) + 1
+        cutoff = max(infos) - max(keep_last, 1) + 1
         # a kept version that is a streaming SEGMENT still needs every
         # older version down to (and including) its full-snapshot base —
         # lower the cutoff so the chain stays readable
-        commits = {c["version"]: c for c in self._commits()}
-        base = cutoff
-        while base > 0 and commits.get(base, {}).get("segment"):
-            base -= 1
-        cutoff = min(cutoff, base)
+        while cutoff > 0 and infos.get(cutoff, {}).get("segment"):
+            cutoff -= 1
         dropped = []
-        for c in self._commits():
-            v = c["version"]
+        for v in sorted(infos):
             snap = f"{self.path}/v={v}"
             if v < cutoff and os.path.isdir(snap):
                 shutil.rmtree(snap)
@@ -494,210 +427,6 @@ class VersionedTable:
             raise ValueError(f"versioned table at [{self.path}] is empty")
         v = latest if version is None else version
         return f"{self.path}/v={v}"
-
-    def export_delta_log(self, version: int | None = None) -> str:
-        """Write a Delta-protocol ``_delta_log`` INSIDE a snapshot dir,
-        making that snapshot a valid single-commit Delta Lake table any
-        Delta reader can open (``spark.read.format("delta")`` where
-        delta-spark exists, delta-rs, DuckDB's delta extension, ...).
-
-        The log is the public Delta transaction-log format: one JSONL
-        commit file ``00000000000000000000.json`` holding ``protocol``
-        (reader 1 / writer 2), ``metaData`` (Spark schema JSON,
-        partition columns from the snapshot's hive layout) and one
-        ``add`` action per parquet data file.  Returns the snapshot
-        directory (= the Delta table root).
-
-        This is the BRIDGE out of the parquet twin: environments
-        without a Delta runtime keep using :meth:`read` / time travel
-        here, and hand any single version to Delta-native consumers
-        without rewriting data (the parquet files are referenced in
-        place).  Spark ignores ``_``-prefixed dirs, so the exported
-        log never disturbs :meth:`read`.
-        """
-        import uuid
-        latest = self.latest_version()
-        if latest is None:
-            raise ValueError(f"versioned table at [{self.path}] is empty")
-        v = latest if version is None else version
-        commits = {c["version"]: c for c in self._commits()}
-        if commits.get(v, {}).get("segment"):
-            raise ValueError(
-                f"version {v} is a streaming SEGMENT (its directory "
-                "holds only that batch's rows); export the whole "
-                "table with export_delta_history() — segments become "
-                "plain add-commits there — or compact() first for a "
-                "self-contained single-snapshot export")
-        snap = self.snapshot_dir(v)
-        part_cols = commits.get(v, {}).get("partition_by") or []
-        schema_json = self.read(v).schema.json()
-        adds = [{"add": a} for a in _walk_parquet_adds(snap, snap)]
-        log_dir = f"{snap}/_delta_log"
-        os.makedirs(log_dir, exist_ok=True)
-        actions = [
-            {"protocol": {"minReaderVersion": 1, "minWriterVersion": 2}},
-            {"metaData": {
-                "id": str(uuid.uuid4()),
-                "format": {"provider": "parquet", "options": {}},
-                "schemaString": schema_json,
-                "partitionColumns": list(part_cols),
-                "configuration": {},
-                "createdTime": int(time.time() * 1000)}},
-        ] + adds
-        with open(f"{log_dir}/{0:020d}.json", "w") as fh:
-            for action in actions:
-                fh.write(json.dumps(action) + "\n")
-        return snap
-
-    def export_delta_history(self) -> str:
-        """Write a Delta-protocol ``_delta_log`` at the TABLE ROOT with
-        ONE COMMIT PER VERSION, so any Delta client — and
-        :func:`.delta_reader.read_delta` — can time-travel the whole
-        twin: ``read_delta(path, version=k)`` ≡ :meth:`read` ``(k)``
-        for every retained version.  Returns the table root.
-
-        Per version: a full snapshot becomes remove-all-previous +
-        add-its-files; a streaming SEGMENT (:meth:`append_batch`)
-        becomes a plain add-commit of only its own files — the exact
-        shape Delta's own incremental appends take, so segment chains
-        export without compaction.  ``metaData`` is re-emitted when
-        the schema or partition columns change (schema evolution
-        across versions).  ``add.path`` is URI-encoded and
-        ``partitionValues`` are the LOGICAL values (Spark's hive-dir
-        escaping undone), per the public protocol.
-
-        The log is derived metadata and is REWRITTEN from the commit
-        log on every call (re-export after new versions just works).
-
-        Versions that cannot be replayed — their snapshot directory
-        :meth:`vacuum`-ed away, or a SEGMENT layered on a
-        hive-PARTITIONED base (the base encodes the partition column
-        in directory names while segment files carry it as data; one
-        Delta ``metaData`` cannot describe both) — are handled the
-        way Delta itself handles expired history: the export starts
-        at the first fully-replayable full snapshot F with a classic
-        single-part CHECKPOINT parquet (plus ``_last_checkpoint``),
-        and time travel below F raises a version-out-of-range in any
-        compliant client, this repo's reader included.
-        """
-        import shutil
-        import uuid
-        commits = self._commits()
-        if not commits:
-            raise ValueError(f"versioned table at [{self.path}] is "
-                             "empty")
-        # first exportable version F: every version in [F, latest]
-        # has its data directory retained and is representable; a
-        # break pushes F past it (and past any segment chained to it)
-        F = 0
-        eff_parts: list[str] = []
-        for c in commits:
-            v = c["version"]
-            seg = bool(c.get("segment"))
-            if not seg:
-                eff_parts = list(c.get("partition_by") or [])
-            broken = (not os.path.isdir(f"{self.path}/v={v}")
-                      or (seg and (bool(eff_parts) or F == v)))
-            if broken:
-                F = v + 1
-        latest = commits[-1]["version"]
-        if F > latest:
-            raise ValueError(
-                f"the latest version ({latest}) of [{self.path}] is "
-                "not representable as Delta (its snapshot directory "
-                "was vacuumed, or it is a segment over a "
-                "hive-partitioned base — the partition column lives "
-                "in directory names for the base but in data files "
-                "for segments); compact() to materialize a full "
-                "snapshot, then re-export")
-        log_dir = f"{self.path}/_delta_log"
-        if os.path.isdir(log_dir):
-            shutil.rmtree(log_dir)
-        os.makedirs(log_dir)
-        prev_live: list[dict] = []     # add payloads live at v-1
-        prev_schema: str | None = None
-        prev_parts: list[str] | None = None
-        for c in commits:
-            v = c["version"]
-            if v < F:
-                continue
-            seg = bool(c.get("segment"))
-            part_cols = [] if seg else \
-                list(c.get("partition_by") or [])
-            adds = _walk_parquet_adds(f"{self.path}/v={v}", self.path)
-            ts = int(float(c["timestamp"]) * 1000)
-            actions: list[dict] = [{"commitInfo": {
-                "timestamp": ts,
-                "operation": c.get("operation") or "WRITE"}}]
-            if v == F:
-                actions.append({"protocol": {"minReaderVersion": 1,
-                                             "minWriterVersion": 2}})
-            schema_json = self.read(v).schema.json()
-            meta = None
-            if schema_json != prev_schema or part_cols != prev_parts:
-                meta = {"id": str(uuid.uuid4()),
-                        "format": {"provider": "parquet",
-                                   "options": {}},
-                        "schemaString": schema_json,
-                        "partitionColumns": list(part_cols),
-                        "configuration": {},
-                        "createdTime": ts}
-                actions.append({"metaData": meta})
-            if seg:
-                prev_live = prev_live + adds
-            else:
-                actions += [{"remove": {"path": a["path"],
-                                        "deletionTimestamp": ts,
-                                        "dataChange": True}}
-                            for a in prev_live]
-                prev_live = adds
-            actions += [{"add": a} for a in adds]
-            with open(f"{log_dir}/{v:020d}.json", "w") as fh:
-                for action in actions:
-                    fh.write(json.dumps(action) + "\n")
-            if v == F and F > 0:
-                # expired-history case: anchor the log with a classic
-                # single-part checkpoint at F so clients reconstruct
-                # from here without commits 0..F-1 (Delta's own
-                # vacuumed-history shape); `meta` is always set at F
-                self._write_delta_checkpoint(log_dir, F, meta, adds)
-            prev_schema, prev_parts = schema_json, part_cols
-        return self.path
-
-    def _write_delta_checkpoint(self, log_dir: str, version: int,
-                                meta: dict, adds: list[dict]) -> None:
-        """One classic single-part ``N.checkpoint.parquet`` holding
-        protocol + metaData + every live add, plus ``_last_checkpoint``
-        — the state anchor Delta clients use instead of replaying from
-        commit 0."""
-        import tempfile
-        ckpt_schema = (
-            "protocol struct<minReaderVersion:int,minWriterVersion:int>,"
-            "metaData struct<id:string,format:struct<provider:string>,"
-            "schemaString:string,partitionColumns:array<string>,"
-            "configuration:map<string,string>>, "
-            "add struct<path:string,partitionValues:map<string,string>,"
-            "size:bigint,modificationTime:bigint,dataChange:boolean>")
-        rows = [((1, 2), None, None),
-                (None, (meta["id"], (meta["format"]["provider"],),
-                        meta["schemaString"],
-                        list(meta["partitionColumns"]),
-                        dict(meta["configuration"])), None)]
-        rows += [(None, None, (a["path"],
-                               dict(a["partitionValues"] or {}),
-                               a["size"], a["modificationTime"],
-                               a["dataChange"])) for a in adds]
-        stage = tempfile.mkdtemp(prefix="ckpt-", dir=log_dir)
-        local_df(self.spark, rows, ckpt_schema).coalesce(1) \
-            .write.mode("overwrite").parquet(f"{stage}/p")
-        part = [n for n in os.listdir(f"{stage}/p")
-                if n.endswith(".parquet")][0]
-        os.replace(f"{stage}/p/{part}",
-                   f"{log_dir}/{version:020d}.checkpoint.parquet")
-        import shutil
-        shutil.rmtree(stage, ignore_errors=True)
-        with open(f"{log_dir}/_last_checkpoint", "w") as fh:
-            json.dump({"version": version, "size": len(rows)}, fh)
 
     def restore(self, version: int) -> int:
         """Delta RESTORE analog: commit a NEW version whose content is

@@ -318,6 +318,13 @@ def test_bm25_index_equals_inflight_and_prunes_partitions(spark, tmp_path):
         spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(
             "formatted"))
     assert "PartitionFilters" in plan and "__bkt" in plan
+    # an empty corpus leaves no postings file; the schema recorded in
+    # the index footer still answers, with an empty top-k
+    empty = _docs(spark, [])
+    write_bm25_index(empty, str(tmp_path / "empty_idx"))
+    assert query_bm25_index(spark, str(tmp_path / "empty_idx"), q,
+                            k=7).collect() == []
+    assert bm25_topk(empty, q, k=7).collect() == []
 
 
 def test_nb_model_store_roundtrip(spark, tmp_path):

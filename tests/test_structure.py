@@ -126,3 +126,19 @@ def test_legend_compile_decisions_have_one_home():
     assert [f for f, t in texts.items() if "stddev_pop" in t] == [
         "plans/compiler.py"]
     assert [f for f, t in texts.items() if "SPARK_TO_PURE" in t] == []
+
+
+def test_table_log_format_has_one_home():
+    """Only ``sources/delta_reader.py`` knows the Delta log format (its
+    directory, action names and the hive null sentinel): versioned
+    tables commit straight to the public log through it, and no file
+    names a private ``_versions`` commit directory."""
+    import re
+    texts = {p.relative_to(_PKG).as_posix(): p.read_text()
+             for p in sorted(_PKG.rglob("*.py"))}
+    for word in ("_delta_log", "commitInfo", "metaData",
+                 "__HIVE_DEFAULT_PARTITION__"):
+        assert [f for f, t in texts.items() if word in t] == [
+            "sources/delta_reader.py"], word
+    private_log = re.compile(r"(?<![\w])_versions\b")
+    assert [f for f, t in texts.items() if private_log.search(t)] == []

@@ -5,11 +5,30 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import Row
 
+from legend_community_delta_spark.sources.delta_reader import read_delta
 from legend_community_delta_spark.sources.versioned import VersionedTable
 
 
 def _rows(df):
     return sorted(tuple(r) for r in df.collect())
+
+
+def _named_rows(df):
+    return sorted((tuple(r) for r in df.select(*sorted(df.columns))
+                   .collect()), key=repr)
+
+
+def assert_delta_matches(spark, t):
+    """The table root is a Delta table: a plain log-replay read at every
+    retained version (its ``v=N`` data dir still on disk) equals
+    ``t.read(k)``."""
+    import os as _os
+    retained = [k for k in range(t.latest_version() + 1)
+                if _os.path.isdir(f"{t.path}/v={k}")]
+    assert retained
+    for k in retained:
+        assert _named_rows(read_delta(spark, t.path, version=k)) == \
+            _named_rows(t.read(k)), f"version {k}"
 
 
 def test_time_travel_and_history(spark, tmp_path):
@@ -32,6 +51,7 @@ def test_time_travel_and_history(spark, tmp_path):
         t.read(7)
     with pytest.raises(ValueError, match="empty"):
         VersionedTable(spark, str(tmp_path / "nope")).read()
+    assert_delta_matches(spark, t)
 
 
 def test_merge_is_row_level_and_versioned(spark, tmp_path):
@@ -49,6 +69,7 @@ def test_merge_is_row_level_and_versioned(spark, tmp_path):
     t.merge(spark.createDataFrame([Row(id=2, v="B")]), keys=["id"])
     assert _rows(t.read()) == [(1, "a"), (2, "B"), (3, "c"), (4, "d")]
     assert t.latest_version() == 2
+    assert_delta_matches(spark, t)
 
 
 def test_vacuum_keeps_history_drops_old_snapshots(spark, tmp_path):
@@ -61,6 +82,7 @@ def test_vacuum_keeps_history_drops_old_snapshots(spark, tmp_path):
     assert [r["version"] for r in t.history().collect()] == [3, 2, 1, 0]
     assert len(t.read(2).collect()) == 3
     assert len(t.read(3).collect()) == 4
+    assert_delta_matches(spark, t)
 
 
 def test_vacuum_protects_append_segment_chain(spark, tmp_path):
@@ -74,6 +96,7 @@ def test_vacuum_protects_append_segment_chain(spark, tmp_path):
     t.compact(target_files=1)                   # v4 full snapshot
     assert t.vacuum(keep_last=1) == [0, 1, 2, 3]
     assert _rows(t.read()) == [(0,), (1,), (2,), (3,)]
+    assert_delta_matches(spark, t)
 
 
 def test_snapshot_diff_classifies_rows(spark):
@@ -113,6 +136,7 @@ def test_diff_versions_over_versioned_table(spark, tmp_path):
     got = {r.id: r.change
            for r in diff_versions(t, 0, 1, ["id"]).collect()}
     assert got == {2: "changed", 3: "added"}
+    assert_delta_matches(spark, t)
 
 
 def test_compact_rewrites_latest_without_changing_rows(spark, tmp_path):
@@ -130,6 +154,7 @@ def test_compact_rewrites_latest_without_changing_rows(spark, tmp_path):
     assert n_after == 1 and n_before > 1
     hist = t.history().collect()
     assert hist[0]["operation"] == "COMPACT"
+    assert_delta_matches(spark, t)
 
 
 def test_restore_commits_old_content_as_new_version(spark, tmp_path):
@@ -141,6 +166,7 @@ def test_restore_commits_old_content_as_new_version(spark, tmp_path):
     assert _rows(t.read()) == [(1, "good")]
     assert _rows(t.read(1)) == [(1, "bad")]   # history intact
     assert t.history().collect()[0]["operation"] == "RESTORE"
+    assert_delta_matches(spark, t)
 
 
 def test_compact_empty_table_raises(spark, tmp_path):
@@ -172,6 +198,7 @@ def test_table_changes_cdf_shape(spark, tmp_path):
     # unchanged rows never appear (id=1 absent) — checked by the exact
     # list above; CDF between identical versions is empty
     assert table_changes(t, 1, 1, keys=["id"]).count() == 0
+    assert_delta_matches(spark, t)
 
 
 def test_stream_append_batches_are_segments_and_idempotent(spark,
@@ -190,6 +217,7 @@ def test_stream_append_batches_are_segments_and_idempotent(spark,
     # segments write O(batch): version dirs hold only their own rows
     seg = spark.read.parquet(str(tmp_path / "seg" / "v=1"))
     assert _rows(seg) == [(2,)]
+    assert_delta_matches(spark, t)
 
 
 def test_stream_segments_fold_and_vacuum_safely(spark, tmp_path):
@@ -208,6 +236,7 @@ def test_stream_segments_fold_and_vacuum_safely(spark, tmp_path):
     dropped = t.vacuum(keep_last=1)
     assert dropped == [0, 1, 2]
     assert _rows(t.read()) == [(1,), (2,), (3,)]
+    assert_delta_matches(spark, t)
 
 
 def test_append_is_o_batch_segment(spark, tmp_path):
@@ -223,6 +252,7 @@ def test_append_is_o_batch_segment(spark, tmp_path):
     assert _rows(t.read(0)) == [(1,), (2,)]
     hist = t.history().collect()
     assert [r["operation"] for r in hist] == ["APPEND", "WRITE"]
+    assert_delta_matches(spark, t)
 
 
 def test_commit_race_loser_raises_and_log_stays_linear(spark, tmp_path):
@@ -237,13 +267,14 @@ def test_commit_race_loser_raises_and_log_stays_linear(spark, tmp_path):
     with pytest.raises(ConcurrentWriteError, match="version 1"):
         t2._commit(1, "APPEND", {"winner": False})
     # the winner's entry is untouched and the log is linear
-    commits = t1._commits()
-    assert [c["version"] for c in commits] == [0, 1]
-    with open(f"{t1._log_dir}/000001.json") as fh:
-        assert _json.load(fh)["winner"] is True
+    commits = t1._infos()
+    assert sorted(commits) == [0, 1]
+    log_dir = tmp_path / "race" / "_delta_log"
+    with open(log_dir / f"{1:020d}.json") as fh:
+        assert _json.loads(fh.readline())["commitInfo"]["winner"] is True
     # no stray tmp file left behind by the loser
     import os as _os
-    assert not [f for f in _os.listdir(t1._log_dir) if "tmp" in f]
+    assert not [f for f in _os.listdir(log_dir) if "tmp" in f]
 
 
 def test_orphan_version_dir_recovered_on_replay(spark, tmp_path):
@@ -268,6 +299,7 @@ def test_orphan_version_dir_recovered_on_replay(spark, tmp_path):
     v = t.append_batch(spark.createDataFrame([Row(id=2)]), batch_id=7)
     assert v == 1
     assert _rows(t.read()) == [(1,), (2,)]  # orphan rows are GONE
+    assert_delta_matches(spark, t)
 
 
 def test_untracked_orphan_raises_and_recover_orphans_clears(
@@ -286,6 +318,7 @@ def test_untracked_orphan_raises_and_recover_orphans_clears(
     assert any(p.endswith("v=1") for p in removed)
     assert t.append(spark.createDataFrame([Row(id=3)])) == 1
     assert _rows(t.read()) == [(1,), (3,)]
+    assert_delta_matches(spark, t)
 
 
 def test_interleaved_writers_winner_data_survives(spark, tmp_path):
@@ -309,12 +342,13 @@ def test_interleaved_writers_winner_data_survives(spark, tmp_path):
         t_a._promote(staging_a, 1)
     # B's committed version is intact: its own rows, token verified
     assert _rows(t_a.read(1)) == [(202,)]
-    commits = {c["version"]: c for c in t_a._commits()}
+    commits = t_a._infos()
     assert t_a._dir_token(1)["token"] == commits[1]["write_token"]
     # A's staging dir was cleaned up on failure
     import os as _os
     assert not [d for d in _os.listdir(str(tmp_path / "ilv"))
                 if d.startswith(".stage-")]
+    assert_delta_matches(spark, t_a)
 
 
 def test_read_detects_token_mismatch(spark, tmp_path):
@@ -353,52 +387,69 @@ def test_table_changes_does_not_pin_cache_entries(spark, tmp_path):
         table_changes(t, i, i + 1, ["id"]).collect()
     cm = spark._jsparkSession.sharedState().cacheManager()
     assert cm.isEmpty(), "table_changes must not leave cached plans"
+    assert_delta_matches(spark, t)
 
 
 def test_append_batch_composes_with_partitioned_base(spark, tmp_path):
-    # hive-partitioned full snapshot + plain segment dirs: read() must
-    # reconcile the partition-column-in-dirnames layout with the
-    # column-in-data layout (per-part reads + unionByName)
+    # a segment on a hive-partitioned table is written with the table's
+    # partition columns, so one Delta log describes base and segment
     t = VersionedTable(spark, str(tmp_path / "hivseg"))
     t.write(spark.createDataFrame(
         [Row(id=1, k="a"), Row(id=2, k="b")]), partition_by=["k"])
     v = t.append_batch(spark.createDataFrame([Row(id=3, k="a")]), 0)
     assert v == 1
+    assert (tmp_path / "hivseg" / "v=1" / "k=a").is_dir()
     got = sorted((r["id"], r["k"]) for r in t.read().collect())
     assert got == [(1, "a"), (2, "b"), (3, "a")]
     # partition filtering still answers correctly on the merged view
     assert sorted(r["id"] for r in t.read()
                   .where("k = 'a'").collect()) == [1, 3]
+    assert_delta_matches(spark, t)
 
 
 def test_segment_schema_evolution_union_by_name(spark, tmp_path):
-    # a later segment adds a column; read() aligns by name and
-    # null-fills the old snapshot instead of failing on position
+    # a later segment adds a column; its commit re-emits the table
+    # schema with the column appended, and older files read it as null
     t = VersionedTable(spark, str(tmp_path / "sevo"))
     t.write(spark.createDataFrame([Row(id=1)]))
     t.append(spark.createDataFrame([Row(id=2, extra="x")]))
     got = sorted((r["id"], r["extra"]) for r in t.read().collect())
     assert got == [(1, None), (2, "x")]
+    assert_delta_matches(spark, t)
+
+
+def _actions(root, version):
+    import json as _json
+    with open(f"{root}/_delta_log/{version:020d}.json") as fh:
+        return [_json.loads(line) for line in fh]
 
 
 def test_export_delta_log_single_commit_table(spark, tmp_path):
-    # the exported _delta_log is the public Delta transaction-log
-    # format: protocol + metaData + one add per parquet file, JSONL
+    # every version is one commit in the public Delta transaction-log
+    # format at the table root: commitInfo first, protocol + metaData
+    # at version 0, a remove per live file for a full snapshot, and
+    # one add per parquet file of its v=N directory
     import json as _json
     import os as _os
     t = VersionedTable(spark, str(tmp_path / "dexp"))
     t.write(spark.createDataFrame([Row(id=1, v="a"), Row(id=2, v="b")]))
     t.merge(spark.createDataFrame([Row(id=2, v="c")]), ["id"])
-    root = t.export_delta_log()                  # latest (v=1)
-    log = _os.path.join(root, "_delta_log", f"{0:020d}.json")
-    actions = [_json.loads(line) for line in open(log)]
-    assert actions[0]["protocol"] == {"minReaderVersion": 1,
-                                      "minWriterVersion": 2}
-    meta = actions[1]["metaData"]
+    root = t.path
+    c0, c1 = _actions(root, 0), _actions(root, 1)
+    assert c0[0]["commitInfo"]["operation"] == "WRITE"
+    assert c0[0]["commitInfo"]["write_token"]
+    assert c0[1]["protocol"] == {"minReaderVersion": 1,
+                                 "minWriterVersion": 2}
+    meta = c0[2]["metaData"]
     assert meta["format"]["provider"] == "parquet"
     schema = _json.loads(meta["schemaString"])
-    assert {f["name"] for f in schema["fields"]} == {"id", "v"}
-    adds = [a["add"] for a in actions[2:]]
+    assert [f["name"] for f in schema["fields"]] == ["id", "v"]
+    assert c1[0]["commitInfo"]["operation"] == "MERGE"
+    assert c1[0]["commitInfo"]["keys"] == ["id"]
+    assert not [a for a in c1 if "metaData" in a or "protocol" in a]
+    adds0 = {a["add"]["path"] for a in c0 if "add" in a}
+    assert {a["remove"]["path"] for a in c1 if "remove" in a} == adds0
+    adds = [a["add"] for a in c1 if "add" in a]
     assert adds, "at least one data file"
     for a in adds:
         full = _os.path.join(root, a["path"])
@@ -406,54 +457,89 @@ def test_export_delta_log_single_commit_table(spark, tmp_path):
         assert a["size"] == _os.path.getsize(full)
         assert a["dataChange"] is True
     # every parquet file in the snapshot is referenced exactly once
-    on_disk = {n for n in _os.listdir(root) if n.endswith(".parquet")}
+    on_disk = {f"v=1/{n}" for n in _os.listdir(t.snapshot_dir(1))
+               if n.endswith(".parquet")}
     assert {a["path"] for a in adds} == on_disk
-    # the log does not disturb the parquet twin's own read path
-    assert _rows(t.read(1)) == [(1, "a"), (2, "c")]
-    # and plain spark.read.parquet on the exported root still works
-    got = sorted(tuple(r) for r in spark.read.parquet(root).collect())
+    assert _rows(read_delta(spark, root)) == [(1, "a"), (2, "c")]
+    # plain spark.read.parquet on the snapshot directory still works
+    got = sorted(tuple(r) for r in
+                 spark.read.parquet(t.snapshot_dir(1)).collect())
     assert got == [(1, "a"), (2, "c")]
+    assert_delta_matches(spark, t)
 
 
 def test_export_delta_log_partitioned_snapshot(spark, tmp_path):
-    import json as _json
-    import os as _os
     t = VersionedTable(spark, str(tmp_path / "dexp2"))
     t.write(spark.createDataFrame(
         [Row(id=1, k="x"), Row(id=2, k="y"), Row(id=3, k="x")]),
         partition_by=["k"])
-    root = t.export_delta_log(0)
-    actions = [_json.loads(line) for line in
-               open(_os.path.join(root, "_delta_log",
-                                  f"{0:020d}.json"))]
-    assert actions[1]["metaData"]["partitionColumns"] == ["k"]
-    adds = [a["add"] for a in actions[2:]]
+    actions = _actions(t.path, 0)
+    assert actions[2]["metaData"]["partitionColumns"] == ["k"]
+    adds = [a["add"] for a in actions if "add" in a]
     assert {a["partitionValues"].get("k") for a in adds} == {"x", "y"}
     for a in adds:
-        assert a["path"].startswith("k=")
+        assert a["path"].startswith("v=0/k=")
+    assert_delta_matches(spark, t)
 
 
 def test_export_delta_log_refuses_segments(spark, tmp_path):
+    # a segment whose shared column changes type is refused at write
+    # time, before any data lands; the table stays a readable Delta
+    # table and compact() folds the good segment
+    import os as _os
     t = VersionedTable(spark, str(tmp_path / "dexp3"))
     t.write(spark.createDataFrame([Row(id=1)]))
     t.append(spark.createDataFrame([Row(id=2)]))
-    with pytest.raises(ValueError, match="compact"):
-        t.export_delta_log()                     # v=1 is a segment
+    with pytest.raises(ValueError, match="column id is bigint"):
+        t.append(spark.createDataFrame([Row(id="3")]))
+    assert t.latest_version() == 1
+    assert not _os.path.exists(f"{t.path}/v=2")
     t.compact()
-    root = t.export_delta_log()                  # compacted snapshot
-    got = sorted(tuple(r) for r in spark.read.parquet(root).collect())
-    assert got == [(1,), (2,)]
+    assert _rows(read_delta(spark, t.path)) == [(1,), (2,)]
+    assert_delta_matches(spark, t)
 
 
 def test_export_delta_log_readable_by_delta_when_available(
         spark, tmp_path):
-    # import-gated: in environments WITH delta-spark the exported
-    # snapshot must open as a real Delta table; here it documents
-    # the intended consumer (this container has no delta wheel)
+    # import-gated: in environments WITH delta-spark the table root
+    # must open as a real Delta table; here it documents the intended
+    # consumer (this container has no delta wheel)
     pytest.importorskip("delta")
     t = VersionedTable(spark, str(tmp_path / "dexp4"))
     t.write(spark.createDataFrame([Row(id=1, v="a")]))
-    root = t.export_delta_log()
     got = sorted(tuple(r) for r in
-                 spark.read.format("delta").load(root).collect())
+                 spark.read.format("delta").load(t.path).collect())
     assert got == [(1, "a")]
+
+
+def test_empty_partitioned_snapshot_stays_readable(spark, tmp_path):
+    # a zero-row partitioned write leaves no parquet file; the commit's
+    # schema comes from df.schema, so the table reads back empty with
+    # the written schema instead of failing schema inference
+    schema = "id bigint, v string, k string"
+    t = VersionedTable(spark, str(tmp_path / "empty"))
+    t.write(spark.createDataFrame([], schema), partition_by=["k"])
+    want = spark.createDataFrame([], schema).schema
+    for df in (t.read(), read_delta(spark, t.path)):
+        assert df.count() == 0
+        assert df.schema.simpleString() == want.simpleString()
+    assert_delta_matches(spark, t)
+
+
+def test_append_batch_table_is_delta_at_every_version(spark, tmp_path):
+    # a table begun by append_batch (a segment at version 0) is a Delta
+    # table at every version through the catalog-free table surface
+    from legend_community_delta_spark.sources import tables
+    if tables._delta_available():
+        pytest.skip("delta-spark present: catalog path covers this")
+    vt = VersionedTable(spark, str(tmp_path / "stream12"))
+    for i in range(12):
+        vt.append_batch(spark.createDataFrame([Row(id=i, v=f"r{i}")]), i)
+    vt.merge(spark.createDataFrame([Row(id=3, v="m")]), ["id"])
+    for k in range(13):
+        assert _rows(tables.read_version(spark, vt.path, k)) == \
+            _rows(vt.read(k)), f"version {k}"
+    assert _rows(vt.read(5)) == [(i, f"r{i}") for i in range(6)]
+    assert tables.table_history(spark, vt.path).collect() == \
+        vt.history().collect()
+    assert_delta_matches(spark, vt)
