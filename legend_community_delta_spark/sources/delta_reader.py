@@ -51,6 +51,7 @@ import json
 import os
 import time
 import uuid
+from typing import NamedTuple
 from urllib.parse import quote, unquote
 
 from pyspark.sql import DataFrame, SparkSession
@@ -211,12 +212,25 @@ def _gate_deletion_vector(path: str, dv) -> None:
             "rows — read it with delta-spark")
 
 
+class LogState(NamedTuple):
+    """The table state one replay of the log reconstructs."""
+    version: int | None          # None: no commit yet
+    live: dict[str, dict]        # live add.path -> partitionValues
+    meta: dict | None            # the metaData action in force
+    protocol: dict | None
+    infos: dict[int, dict]       # commitInfo per replayed JSON commit
+    #                              (all of them unless a checkpoint
+    #                              starts the replay)
+
+
+NO_COMMIT = LogState(None, {}, None, None, {})
+
+
 def _replay(spark: SparkSession, path: str, version: int | None = None,
-            timestamp_ms: float | None = None
-            ) -> tuple[dict[str, dict], dict | None, dict | None]:
+            timestamp_ms: float | None = None) -> LogState:
     """Replay the log up to *version* / *timestamp_ms* (latest when
-    both omitted): ``(live, metaData, protocol)`` with *live* mapping
-    each live ``add.path`` to its ``partitionValues``.
+    both omitted).  A log that holds no commit yet (a first commit
+    that crashed before its link) replays to :data:`NO_COMMIT`.
 
     Requesting a version below the earliest reconstructable state
     (its commit files vacuumed and no checkpoint at/below it) raises
@@ -235,6 +249,8 @@ def _replay(spark: SparkSession, path: str, version: int | None = None,
                 f"[{path}] has only multi-part/v2 checkpoints; this "
                 "reader supports single-part classic checkpoints — "
                 "compact the log or read with delta-spark")
+        if version is None and timestamp_ms is None:
+            return NO_COMMIT
         raise ValueError(f"[{path}] has an empty _delta_log")
     if version is not None and timestamp_ms is not None:
         raise ValueError("pass version OR timestamp_ms, not both")
@@ -290,6 +306,7 @@ def _replay(spark: SparkSession, path: str, version: int | None = None,
     live: dict[str, dict] = {}
     meta: dict | None = None
     protocol: dict | None = None
+    infos: dict[int, dict] = {}
 
     if cp_v is not None:
         cp = spark.read.parquet(cps[cp_v])
@@ -336,7 +353,9 @@ def _replay(spark: SparkSession, path: str, version: int | None = None,
                     meta = action["metaData"]
                 elif "protocol" in action:
                     protocol = action["protocol"]
-    return live, meta, protocol
+                elif "commitInfo" in action:
+                    infos[v] = action["commitInfo"]
+    return LogState(target, live, meta, protocol, infos)
 
 
 def _hive_base(rel: str, part_cols: list[str],
@@ -371,7 +390,8 @@ def read_delta(spark: SparkSession, path: str,
     with the log's schema, like Delta does.
     """
     path = path.rstrip("/")
-    live, meta, protocol = _replay(spark, path, version, timestamp_ms)
+    _, live, meta, protocol, _ = _replay(spark, path, version,
+                                         timestamp_ms)
     _gate_protocol(path, protocol)
     if meta is None:
         raise ValueError(f"[{path}] log has no metaData action")
@@ -465,9 +485,8 @@ def _walk_parquet_adds(data_dir: str, base: str) -> list[dict]:
     return out
 
 
-def write_commit(spark: SparkSession, path: str, version: int,
-                 data_dir: str, info: dict,
-                 schema: StructType | None = None,
+def write_commit(path: str, version: int, data_dir: str, info: dict,
+                 prior: LogState, schema: StructType | None = None,
                  partition_cols: list[str] | None = None,
                  replace: bool = True) -> None:
     """Commit *version* of the Delta table at *path*: one JSONL file
@@ -476,16 +495,16 @@ def write_commit(spark: SparkSession, path: str, version: int,
     or *partition_cols* differ from the previous version's (None keeps
     them), a ``remove`` for every live file when *replace* (a full
     snapshot), and an ``add`` for each parquet file under *data_dir*.
+    *prior* is the replayed state the commit follows
+    (:data:`NO_COMMIT` for version 0); the caller reads it once, so
+    the commit adds no pass over the log.
 
     The file is hard-linked into place, so two writers racing to the
     same version make the loser raise :class:`FileExistsError` instead
     of silently replacing version N — the log stays linear (Delta's
     optimistic-concurrency commit point)."""
     ts = int(time.time() * 1000)
-    live: dict[str, dict] = {}
-    meta: dict | None = None
-    if version > 0:
-        live, meta, _ = _replay(spark, path, version - 1)
+    live, meta = prior.live, prior.meta
     actions: list[dict] = [{"commitInfo": {"timestamp": ts, **info}}]
     if meta is None:
         actions.append({"protocol": {"minReaderVersion": 1,

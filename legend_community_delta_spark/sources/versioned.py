@@ -54,8 +54,9 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import StructType
 
-from .delta_reader import (_log_dir, _replay, commit_infos, delta_history,
-                           read_delta, write_commit)
+from .delta_reader import (NO_COMMIT, LogState, _log_dir, _replay,
+                           commit_infos, delta_history, read_delta,
+                           write_commit)
 
 
 class ConcurrentWriteError(RuntimeError):
@@ -85,22 +86,32 @@ class VersionedTable:
             return {}
         return commit_infos(self.path)
 
+    def _log(self) -> LogState:
+        """One pass over the log: the latest version's state, with the
+        commit info of every version (no checkpoint is ever written
+        here)."""
+        if _log_dir(self.path, required=False) is None:
+            return NO_COMMIT
+        return _replay(self.spark, self.path)
+
     def latest_version(self) -> int | None:
         return max(self._infos(), default=None)
 
     def _commit(self, version: int, operation: str, meta: dict,
                 schema: StructType | None = None,
-                partition_by: list[str] | None = None) -> None:
+                partition_by: list[str] | None = None,
+                prior: LogState | None = None) -> None:
         """Link *version*'s Delta commit for the ``v=N`` directory — a
         segment (``meta["segment"]``) only adds its files, a full
-        snapshot also removes every live one.  Two writers racing to
-        the same version make the LOSER raise instead of silently
-        replacing version N."""
+        snapshot also removes every live one.  *prior* is the log state
+        the caller read after staging (read here when omitted).  Two
+        writers racing to the same version make the LOSER raise instead
+        of silently replacing version N."""
         try:
-            write_commit(self.spark, self.path, version,
-                         f"{self.path}/v={version}",
-                         {"operation": operation, **meta}, schema,
-                         partition_by, replace=not meta.get("segment"))
+            write_commit(self.path, version, f"{self.path}/v={version}",
+                         {"operation": operation, **meta},
+                         prior or self._log(), schema, partition_by,
+                         replace=not meta.get("segment"))
         except FileExistsError:
             raise ConcurrentWriteError(
                 f"version {version} at [{self.path}] was committed by "
@@ -227,23 +238,22 @@ class VersionedTable:
         zero rows reads back empty with that schema."""
         staging, token = self._stage(df, {"operation": operation},
                                      partition_by)
-        latest = self.latest_version()
-        version = 0 if latest is None else latest + 1
+        prior = self._log()
+        version = 0 if prior.version is None else prior.version + 1
         self._promote(staging, version)
         self._commit(version, operation,
                      {**(meta or {}), "write_token": token}, df.schema,
-                     list(partition_by or []))
+                     list(partition_by or []), prior)
         return version
 
-    def _segment_schema(self, df: DataFrame
+    def _segment_schema(self, df: DataFrame, meta: dict | None
                         ) -> tuple[StructType, list[str]]:
-        """The table schema once *df* is appended (new columns go last;
-        older files read them as null) and the table's partition
-        columns.  A shared column whose type changes raises here, at
-        write time."""
-        if self.latest_version() is None:
+        """The table schema once *df* is appended to the table whose
+        replayed metadata is *meta* (new columns go last; older files
+        read them as null) and the table's partition columns.  A shared
+        column whose type changes raises here, at write time."""
+        if meta is None:
             return df.schema, []
-        _live, meta, _ = _replay(self.spark, self.path)
         schema = StructType.fromJson(json.loads(meta["schemaString"]))
         have = {f.name: f.dataType.simpleString() for f in schema.fields}
         for f in df.schema.fields:
@@ -258,23 +268,25 @@ class VersionedTable:
         return schema, list(meta["partitionColumns"])
 
     def _write_segment(self, df: DataFrame, operation: str,
-                       meta: dict) -> int:
+                       meta: dict, before: LogState) -> int:
         """Commit *df* as a SEGMENT version: only the NEW rows hit disk
         (O(batch)), laid out with the table's partition columns, and
-        the commit only adds them.  Crash-safe via the staged-write
+        the commit only adds them.  *before* is the log state read
+        before staging; the log is read once more after it, for the
+        version and the commit.  Crash-safe via the staged-write
         protocol (see the section comment): a replayed stream batch
         clears ONLY an orphan stamped with its own ``batch_id``."""
-        schema, partition_by = self._segment_schema(df)
+        schema, partition_by = self._segment_schema(df, before.meta)
         batch_id = meta.get("batch_id")
         staging, token = self._stage(
             df, {"operation": operation, "batch_id": batch_id},
             partition_by)
-        latest = self.latest_version()
-        version = 0 if latest is None else latest + 1
+        prior = self._log()
+        version = 0 if prior.version is None else prior.version + 1
         self._promote(staging, version, batch_id=batch_id)
         self._commit(version, operation,
                      {**meta, "segment": True, "write_token": token},
-                     schema, partition_by)
+                     schema, partition_by, prior)
         return version
 
     def append(self, df: DataFrame) -> int:
@@ -283,9 +295,10 @@ class VersionedTable:
         the logical snapshot at that version is previous ∪ *df*.  Run
         :meth:`compact` periodically to fold segments back into one
         full snapshot."""
-        if self.latest_version() is None:
+        before = self._log()
+        if before.version is None:
             return self.write(df, "APPEND")
-        return self._write_segment(df, "APPEND", {})
+        return self._write_segment(df, "APPEND", {}, before)
 
     def append_batch(self, df: DataFrame, batch_id: int) -> int | None:
         """Idempotent micro-batch append for Structured Streaming sinks
@@ -309,12 +322,13 @@ class VersionedTable:
         trigger; this is O(batch).  Run :meth:`compact` periodically
         to fold segments back into one snapshot.
         """
-        seen = {c.get("batch_id") for c in self._infos().values()
+        before = self._log()
+        seen = {c.get("batch_id") for c in before.infos.values()
                 if c.get("operation") == "STREAM_APPEND"}
         if batch_id in seen:
             return None
         return self._write_segment(df, "STREAM_APPEND",
-                                   {"batch_id": int(batch_id)})
+                                   {"batch_id": int(batch_id)}, before)
 
     def merge(self, updates: DataFrame, keys: list[str]) -> int:
         """Row-level upsert: matched keys replaced, new keys inserted —

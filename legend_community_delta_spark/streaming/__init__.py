@@ -5,7 +5,7 @@ code (SURVEY §1.1); this module supplies it the Spark-native way:
 
 * :func:`read_stream` — ``readStream`` with the model-enforced schema;
 * :func:`validate_stream` — the same expectation column as batch
-  ``legend_validate`` (pure Column algebra works identically on streams);
+  ``legend_validate`` (one SQL projection works identically on streams);
 * :func:`windowed_dq_metrics` — watermarked tumbling-window counts of rule
   violations (late data handled by the watermark, state bounded);
 * :func:`write_validated` — sink helper with ``foreachBatch`` quarantine:
@@ -34,8 +34,8 @@ def read_stream(legend: Legend, entity_or_mapping: str, path: str,
 
 def validate_stream(df: DataFrame, expectations: dict[str, str],
                     column: str = "legend") -> DataFrame:
-    """Identical Column-algebra validation as batch — streams need no UDF
-    either; the projection is stateless so it adds nothing to state size."""
+    """Identical validation as batch — streams need no UDF either; the
+    projection is stateless so it adds nothing to state size."""
     return legend_validate(df, expectations, column)
 
 

@@ -1,5 +1,6 @@
 from __future__ import annotations
 
+import contextlib
 import os
 import sys
 
@@ -56,6 +57,31 @@ def legend(model):
 @pytest.fixture(scope="session")
 def legend_spark(model, spark):
     return Legend(model, spark)
+
+
+@contextlib.contextmanager
+def py4j_round_trips():
+    """Record every Py4J round trip (one
+    ``ClientServerConnection.send_command`` call each) the block makes on
+    the calling thread; yields the list of recorded commands, so
+    ``len()`` is the count.  Py4J's finalizer thread, which releases
+    dropped JVM objects whenever Python frees them, is not counted."""
+    import threading
+    from py4j.clientserver import ClientServerConnection
+    calls: list[str] = []
+    send = ClientServerConnection.send_command
+    caller = threading.get_ident()
+
+    def counted(self, command):
+        if threading.get_ident() == caller:
+            calls.append(command)
+        return send(self, command)
+
+    ClientServerConnection.send_command = counted
+    try:
+        yield calls
+    finally:
+        ClientServerConnection.send_command = send
 
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR_TEST", "/root/testdata/sf0.001")

@@ -81,13 +81,13 @@ def test_hive_laid_root_takes_base_path_scan(spark, tmp_path):
     # the one hive decoder undoes the escaping on the key, so the files
     # still take the native basePath scan
     from legend_community_delta_spark.sources.delta_reader import (
-        write_commit)
+        NO_COMMIT, write_commit)
     root = str(tmp_path / "hive")
     df = spark.createDataFrame([(1, "x"), (2, "y"), (3, "x")],
                                "id long, `p:k` string")
     df.write.partitionBy("p:k").parquet(root)
     assert os.path.isdir(os.path.join(root, "p%3Ak=x"))
-    write_commit(spark, root, 0, root, {"operation": "WRITE"},
+    write_commit(root, 0, root, {"operation": "WRITE"}, NO_COMMIT,
                  df.schema, ["p:k"])
     got = read_delta(spark, root)
     assert got.columns == ["id", "p:k"]

@@ -543,3 +543,37 @@ def test_append_batch_table_is_delta_at_every_version(spark, tmp_path):
     assert tables.table_history(spark, vt.path).collect() == \
         vt.history().collect()
     assert_delta_matches(spark, vt)
+
+
+def test_append_batch_reads_the_log_at_most_twice(spark, tmp_path,
+                                                  monkeypatch):
+    # one replay before staging (replayed batch ids, schema) and one
+    # after (version, commit) — not one pass per check
+    from legend_community_delta_spark.sources import delta_reader
+    vt = VersionedTable(spark, str(tmp_path / "reads"))
+    for i in range(5):
+        vt.append_batch(spark.createDataFrame([Row(id=i)]), i)
+    calls = []
+    real = delta_reader._log_entries
+    monkeypatch.setattr(delta_reader, "_log_entries",
+                        lambda log_dir: calls.append(log_dir)
+                        or real(log_dir))
+    assert vt.append_batch(spark.createDataFrame([Row(id=5)]), 5) == 5
+    assert len(calls) <= 2, calls
+    calls.clear()
+    assert vt.append_batch(spark.createDataFrame([Row(id=5)]), 5) is None
+    assert len(calls) == 1
+    monkeypatch.undo()
+    assert _rows(vt.read()) == [(i,) for i in range(6)]
+    assert_delta_matches(spark, vt)
+
+
+def test_first_commit_after_crash_left_empty_log(spark, tmp_path):
+    # a first commit that died before its link leaves _delta_log without
+    # a commit: the table is still empty to a writer
+    import os as _os
+    vt = VersionedTable(spark, str(tmp_path / "crashed"))
+    _os.makedirs(f"{vt.path}/_delta_log")
+    assert vt.latest_version() is None
+    assert vt.append_batch(spark.createDataFrame([Row(id=1)]), 0) == 0
+    assert _rows(vt.read()) == [(1,)]
